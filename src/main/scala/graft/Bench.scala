@@ -18,9 +18,6 @@ object Bench {
       .config("spark.ui.enabled", "false")
       // events.parquet is TIMESTAMP(NANOS) — see Tables.events
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // pin the managed-table location (q59/q60 bucketed layouts) inside
-      // the repo regardless of the invoking working directory
-      .config("spark.sql.warehouse.dir", "/root/repo/spark-warehouse")
       // bench times q59's and q130's production (sketch-only) shapes;
       // the exact verification branches stay in Verify — see
       // q59Sketches / q130JoinCard
@@ -28,12 +25,10 @@ object Bench {
       .config("spark.graft.q130.verifyExact", "false")
       // STATIC conf, must precede the first session: the generated-class
       // cache defaults to 100 entries, and the interleaved schedule
-      // (261 queries per round, several codegen units each) evicts a
-      // query's classes between its own samples — every sample then
-      // re-runs Janino, a flat ~0.3-0.5 s tax misread as plan cost
-      // (round-18: the first interleaved sf0.1 run came in at 292 s vs
-      // 169 s precisely from this; block-iterated samples hid it by
-      // hitting the 100-entry cache back-to-back)
+      // (every query once per round, several codegen units each) would
+      // evict a query's classes between its own samples — every sample
+      // would then re-run Janino, a flat ~0.3-0.5 s tax misread as plan
+      // cost
       .config("spark.sql.codegen.cache.maxEntries", "10000")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
@@ -45,34 +40,32 @@ object Bench {
       System.err.println(s"[bench] swept ${swept.size} stale layout dir(s)")
     // Reuse analyzed table DataFrames across queries: the fixture dirs are
     // immutable for the whole run, so re-listing files and re-reading
-    // footers per query is pure fixed overhead (round-4 verdict: ~0.3-0.5s
-    // per-query floor across 58 queries dominates the proxy ratio).
+    // footers per query is pure fixed overhead (a ~0.3-0.5 s per-query
+    // floor that would dominate short queries).
     Tables.enableReuse()
     // Warm the session (JVM classloading, parquet footer cache) on the
     // smallest fixture so fixed startup cost isn't attributed to queries.
     try SparkEntry.entry(spark).write.format("noop").mode("overwrite").save()
     catch { case e: Throwable => System.err.println(s"[bench] warmup failed: ${e.getMessage}") }
-    // MEASUREMENT DESIGN (round-18, replacing per-query AAA,BBB blocks):
+    // MEASUREMENT DESIGN:
     //   1. one WARMUP pass over every query in name order — absorbs
-    //      first-touch Janino codegen + JIT per plan shape (round-2
-    //      verdict) and one-time layout side work (q59/q60 CTAS), so
-    //      neither lands in a timed sample;
+    //      first-touch Janino codegen + JIT per plan shape and one-time
+    //      layout side work (q59/q60 CTAS), so neither lands in a timed
+    //      sample;
     //   2. THREE timed ROUNDS, each executing every query once,
-    //      ROUND-ROBIN (A,B,C,A,B,C): a query's samples are now spread
-    //      ~minutes apart, so an ambient-contention window (the
-    //      round-17 driver tail's 22% spread that every round
-    //      re-litigates) inflates ONE round of many queries — visible
-    //      as a correlated per-round stripe in the iterations artifact
-    //      — instead of silently tripling one query's median;
+    //      ROUND-ROBIN (A,B,C,A,B,C): a query's samples are spread
+    //      ~minutes apart, so an ambient-contention window inflates ONE
+    //      round of many queries — visible as a correlated per-round
+    //      stripe in the iterations artifact — instead of silently
+    //      tripling one query's median;
     //   3. adaptive WIDENING, also interleaved: queries whose three
     //      samples still spread >2x get two extra rounds (contention is
-    //      ambient, not plan cost — round-6 verdict: q59 15.2 s median
-    //      vs 1.8 s isolated under exactly this signature), then their
-    //      registered per-branch diagnostics run for attribution.
+    //      ambient, not plan cost), then their registered per-branch
+    //      diagnostics run for attribution.
     // A single gc+quiesce separates consecutive samples (round-robin
-    // already puts ~260 queries of natural separation between two
-    // samples of the same plan; the round-4 double-GC discipline keeps
-    // one query's heap debt off its neighbor). Failures are surfaced on
+    // already puts the whole board of natural separation between two
+    // samples of the same plan; the GC before each sample keeps one
+    // query's heap debt off its neighbor). Failures are surfaced on
     // stderr and reported as -1, never silently recorded as fast.
     val qseq = SparkEntry.queries.toSeq.sortBy(_._1)
     val samples = scala.collection.mutable.LinkedHashMap(
@@ -87,9 +80,9 @@ object Bench {
         return -1.0
       }
       val dt = (System.nanoTime() - t0) / 1e9
-      // stderr breadcrumb per iteration (round-6 verdict task 2c): when
-      // the environment inflates a sample, the full log shows exactly
-      // which round of which query stalled.
+      // stderr breadcrumb per iteration: when the environment inflates a
+      // sample, the full log shows exactly which round of which query
+      // stalled.
       System.err.println(f"[bench] $name $tag dt=$dt%.3fs")
       dt
     }
@@ -143,7 +136,7 @@ object Bench {
     // min + median + spread (max/min) per query: the contention
     // diagnosis in ONE artifact line — a high-spread query under an
     // interleaved schedule is ambient load (its min is the plan cost);
-    // a tight spread IS the plan cost (round-17 verdict item 5).
+    // a tight spread IS the plan cost.
     def r3(v: Double): Double = math.rint(v * 1000) / 1000
     val stats = results.map { case (k, med, iters) =>
       val s =
@@ -157,17 +150,14 @@ object Bench {
     }.mkString("{", ",", "}")
     val failed = results.count(_._2 < 0)
     // total:-1 when anything failed — the headline metric must never look
-    // better because a query was excluded (round-2 advice).
+    // better because a query was excluded.
     val total =
       if (failed > 0) -1.0 else results.collect { case (_, v, _) if v >= 0 => v }.sum
-    // BOUNDED aggregate-stats line + contention self-label (round-18
-    // verdict item 6): the driver keeps only ~2 KB of output TAIL, into
-    // which a 261-query stats map can never fit — but min-sum /
-    // median-sum / spread histogram DO, and they are exactly what
-    // separates "the code got slower" from "the window was contended"
-    // (round-18: driver tail read 189.4 s while the clean run read
-    // 156.2 s; 41 queries had spread >2x — ambient, but the artifact
-    // couldn't say so by itself).
+    // BOUNDED aggregate-stats line + contention self-label: a tail
+    // capture of ~2 KB can never hold the full per-query stats map — but
+    // min-sum / median-sum / spread histogram fit, and they are exactly
+    // what separates "the code got slower" from "the window was
+    // contended".
     val clean = results.filter(_._2 >= 0)
     val minSum = r3(clean.map(_._3.min).sum)
     val medianSum = r3(clean.map(_._2).sum)
@@ -196,13 +186,13 @@ object Bench {
     println(s"""{"metric":"iterations","iterations":$its,"sf":"$sfDir"}""")
     println(statsSummary)
     println(headline)
-    // Belt-and-braces artifact (round-7 verdict task 1): the stdout capture
-    // harness keeps only a bounded TAIL and its parser has eaten the final
-    // line five rounds running (sbt's own `[success]` trailer prints after
-    // ours and cannot be suppressed from here). Writing the same summary to
-    // a file makes the headline independent of any stdout capture; stdout
-    // stays authoritative for the driver, the file is the durable copy.
-    val outPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "/root/repo/BENCH_SUMMARY.json")
+    // Belt-and-braces artifact: a stdout capture that keeps only a
+    // bounded TAIL can lose the final line (sbt's own `[success]` trailer
+    // prints after ours and cannot be suppressed from here). Writing the
+    // same summary to a file makes the headline independent of any stdout
+    // capture; stdout stays authoritative, the file is the durable copy.
+    // The default path is relative: `sbt run` forks in the project root.
+    val outPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "BENCH_SUMMARY.json")
     try {
       val w = new java.io.PrintWriter(new java.io.File(outPath), "UTF-8")
       try {

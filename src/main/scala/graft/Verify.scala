@@ -11,10 +11,10 @@ object Verify {
     val only: Option[Set[String]] =
       if (args.length > 2) Some(args(2).split(",").toSet) else None
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    // decoupled for the partition-invariance probe (round-17 verdict
-    // item 4): re-running the board at e.g. 200 shuffle partitions on
-    // the same local[32] must produce hash-identical results — sort-tie
-    // and bucket-count assumptions hide exactly there
+    // decoupled for the partition-invariance probe: re-running the board
+    // at e.g. 200 shuffle partitions on the same local[32] must produce
+    // hash-identical results — sort-tie and bucket-count assumptions
+    // hide exactly there
     val shufflePartitions =
       sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_PARTITIONS", cpus)
     val spark = SparkSession.builder()
@@ -24,9 +24,6 @@ object Verify {
       .config("spark.ui.enabled", "false")
       // events.parquet is TIMESTAMP(NANOS) — see Tables.events
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // pin the managed-table location (q59/q60 bucketed layouts) inside
-      // the repo regardless of the invoking working directory
-      .config("spark.sql.warehouse.dir", "/root/repo/spark-warehouse")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // startup-time warehouse hygiene: reclaim layout generations

@@ -1,6 +1,5 @@
 package graft.ops
 
-import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Column, DataFrame, Observation}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
@@ -42,39 +41,22 @@ import org.apache.spark.storage.StorageLevel
   * union+join level per round — exponential analysis cost). On a real
   * cluster with flaky executors, swap localCheckpoint for a reliable
   * `checkpoint` dir: the algorithm is unchanged, only the storage of the
-  * per-round frontier.
+  * per-round frontier. Each superseded round's snapshot and the edge
+  * snapshot are released; the returned labels read the last round's
+  * snapshot, which therefore belongs to the result.
   */
 object ConnectedComponents {
 
   /** The observed-metric column computing the label checksum during the
-    * SAME job that materializes a round (round-6 verdict task 2a: a
-    * separate `agg().head()` action per round doubled the per-round job
-    * count, and under driver-environment contention each extra job is an
-    * extra scheduling-delay exposure). coalesce: an empty edge set (no
-    * duplicates found) must converge on the first round, not NPE on a
-    * null sum.
+    * SAME job that materializes a round: a separate `agg().head()` action
+    * per round would double the per-round job count, and under contention
+    * each extra job is an extra scheduling delay. coalesce: an empty edge
+    * set (no duplicates found) must converge on the first round, not NPE
+    * on a null sum.
     */
   private def checksumMetric: Column =
     coalesce(sum(col("cluster_id").cast("decimal(38,0)")),
       lit(0).cast("decimal(38,0)")).as("cs")
-
-  /** `localCheckpoint(eager)` that also reports WHICH RDDs the checkpoint
-    * persisted, so callers can free those blocks deterministically.
-    * `Dataset.unpersist` on a checkpointed frame does NOT release the
-    * checkpoint's cached RDD blocks (they are freed only when the RDD is
-    * GC'd via ContextCleaner), so an iterative loop would otherwise leave
-    * every round's frontier in storage memory for the rest of the job.
-    * The id-set diff is safe here: rounds run sequentially on the driver.
-    */
-  private def checkpointTracked(df: DataFrame): (DataFrame, Seq[RDD[_]]) = {
-    val sc = df.sparkSession.sparkContext
-    val before = sc.getPersistentRDDs.keySet
-    val out = df.localCheckpoint(eager = true)
-    val added = sc.getPersistentRDDs.collect {
-      case (id, r) if !before.contains(id) => r
-    }.toSeq
-    (out, added)
-  }
 
   /** Assign each node appearing in `edges` the minimum node id reachable
     * from it (its component representative).
@@ -102,7 +84,7 @@ object ConnectedComponents {
     // Materialize the (usually expensive — LSH, pairwise-scoring) edge
     // plan ONCE before symmetrizing: a plain union of two selects over
     // `edges` would evaluate that upstream plan twice in the first job.
-    val (e0, e0Rdds) = checkpointTracked(edges.select(src, dst))
+    val e0 = edges.select(src, dst).localCheckpoint(eager = true)
     // Symmetrize once; both propagation directions come from this frame.
     val sym = e0
       .unionByName(e0.select(col("dst").as("src"), col("src").as("dst")))
@@ -121,14 +103,14 @@ object ConnectedComponents {
     // checkpoint+checksum round on every invocation.
     // Each round is therefore ONE action (observe folds the convergence
     // checksum into the checkpoint job) running ONE shuffle.
-    def round(plan: DataFrame): (DataFrame, Seq[RDD[_]], java.math.BigDecimal) = {
+    def round(plan: DataFrame): (DataFrame, java.math.BigDecimal) = {
       val obs = Observation()
-      val (df, rdds) = checkpointTracked(plan.observe(obs, checksumMetric))
-      (df, rdds, obs.get("cs").asInstanceOf[java.math.BigDecimal])
+      val df = plan.observe(obs, checksumMetric).localCheckpoint(eager = true)
+      (df, obs.get("cs").asInstanceOf[java.math.BigDecimal])
     }
 
     val t0 = System.nanoTime()
-    var (labels, labelRdds, sumPrev) = round(
+    var (labels, sumPrev) = round(
       sym.groupBy(col("src").as("node"))
         .agg(min(col("dst")).as("mn"))
         .select(col("node"), least(col("node"), col("mn")).as("cluster_id")))
@@ -140,22 +122,19 @@ object ConnectedComponents {
       // neighbor labels + own label → min per node. The groupBy reuses the
       // hash partitioning of the join output when keys align; either way a
       // round is exactly one shuffle of (node, label) pairs.
-      val (next, nextRdds, sumNext) = round(
+      val (next, sumNext) = round(
         sym.join(labels, sym("src") === labels("node"))
           .select(col("dst").as("node"), col("cluster_id"))
           .unionByName(labels)
           .groupBy("node")
           .agg(min("cluster_id").as("cluster_id")))
-      labels.unpersist(blocking = false)
-      labelRdds.foreach(_.unpersist(blocking = false))
+      Snapshots.release(labels)
       labels = next
-      labelRdds = nextRdds
       converged = sumNext.compareTo(sumPrev) == 0
       sumPrev = sumNext
       it += 1
-      // Per-round wall time on stderr: a contended environment (round-6
-      // driver bench: 10.6 s vs 2.3 s clean) is then diagnosable from the
-      // log — which round stalled, scheduling vs compute — not inferable.
+      // Per-round wall time on stderr: under a contended environment the
+      // log then shows which round stalled, scheduling vs compute.
       System.err.println(
         f"[cc] round=${it + 1} dt=${(System.nanoTime() - tr) / 1e9}%.2fs converged=$converged")
     }
@@ -163,7 +142,7 @@ object ConnectedComponents {
       s"connected components did not converge in $maxIter rounds — " +
         "graph diameter exceeds the dedup-cluster assumption")
     sym.unpersist(blocking = false)
-    e0Rdds.foreach(_.unpersist(blocking = false))
+    Snapshots.release(e0)
     (labels, it + 1)
   }
 

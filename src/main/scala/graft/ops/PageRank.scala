@@ -1,6 +1,5 @@
 package graft.ops
 
-import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -11,8 +10,9 @@ import org.apache.spark.sql.functions._
   * Reference scope: the reference pipeline has no graph operator at all;
   * this generalizes its per-key aggregation surface the same way
   * [[ConnectedComponents]] generalizes its duplicate-flagging. The two
-  * modules deliberately share the iteration skeleton (tracked eager
-  * localCheckpoint per round, unpersist of superseded frontiers).
+  * modules deliberately share the iteration skeleton (eager
+  * localCheckpoint per round, [[Snapshots.release]] of superseded
+  * frontiers).
   *
   * Arithmetic contract (what makes the result hashable cross-engine):
   * float PageRank is order-dependent in its last ulp, so every division
@@ -31,27 +31,17 @@ import org.apache.spark.sql.functions._
   * nodes at the default scale.
   *
   * 100 TB story: the expensive input (edge aggregation over a corpus) is
-  * materialized ONCE via tracked localCheckpoint, pre-joined with its
+  * materialized ONCE via eager localCheckpoint, pre-joined with its
   * out-weight totals so every iteration is exactly ONE shuffle: ranks
   * hash-join edges (edge-partitioned), groupBy dst with map-side partial
   * sums, then a left join back to the node set (rank-state-sized, never
   * corpus-sized). Fixed iteration count — no convergence action — so an
   * N-iteration call runs N+1 jobs total. Frontier state is (node, long)
-  * pairs, 16 bytes/node; superseded rounds are unpersisted via their
-  * tracked RDDs (Dataset.unpersist alone does not free checkpoint
-  * blocks).
+  * pairs, 16 bytes/node; each superseded round, and the edge and node
+  * snapshots at the end, are released. The returned ranks read the last
+  * round's snapshot, which therefore belongs to the result.
   */
 object PageRank {
-
-  private def checkpointTracked(df: DataFrame): (DataFrame, Seq[RDD[_]]) = {
-    val sc = df.sparkSession.sparkContext
-    val before = sc.getPersistentRDDs.keySet
-    val out = df.localCheckpoint(eager = true)
-    val added = sc.getPersistentRDDs.collect {
-      case (id, r) if !before.contains(id) => r
-    }.toSeq
-    (out, added)
-  }
 
   /** Iterate weighted PageRank over a directed weighted edge list.
     *
@@ -69,17 +59,16 @@ object PageRank {
     // the upstream plan again.
     val e = edges.select(
       col(srcCol).as("src"), col(dstCol).as("dst"), col(wCol).cast("long").as("w"))
-    val (ewo, ewoRdds) = checkpointTracked(
-      e.join(e.groupBy("src").agg(sum("w").as("outw")), "src"))
-    // node set materialized ONCE (round-20): it is the left side of
-    // every iteration's rank rebuild, and deriving it lazily re-ran the
+    val ewo = e.join(e.groupBy("src").agg(sum("w").as("outw")), "src")
+      .localCheckpoint(eager = true)
+    // node set materialized ONCE: it is the left side of every
+    // iteration's rank rebuild, and deriving it lazily would re-run the
     // union+distinct over the edge snapshot each round
-    val (nodes, nodeRdds) = checkpointTracked(
-      ewo.select(col("src").as("node"))
-        .unionByName(ewo.select(col("dst").as("node")))
-        .distinct())
-    var (ranks, rankRdds) = checkpointTracked(
-      nodes.withColumn("r", lit(scale)))
+    val nodes = ewo.select(col("src").as("node"))
+      .unionByName(ewo.select(col("dst").as("node")))
+      .distinct()
+      .localCheckpoint(eager = true)
+    var ranks = nodes.withColumn("r", lit(scale)).localCheckpoint(eager = true)
     for (_ <- 1 to iters) {
       val contrib = ewo.join(ranks, ewo("src") === ranks("node"))
         .withColumn("c", expr(
@@ -87,19 +76,17 @@ object PageRank {
             " div cast(outw as decimal(38,0))"))
         .groupBy(col("dst").as("cnode"))
         .agg(sum("c").as("cs"))
-      val (next, nextRdds) = checkpointTracked(
-        nodes.join(contrib, nodes("node") === contrib("cnode"), "left")
-          .select(col("node"),
-            (lit(base) + expr(
-              s"(cast($dampNum as decimal(38,0)) * cast(coalesce(cs, 0) as decimal(38,0)))" +
-                s" div cast($dampDen as decimal(38,0))")).as("r")))
-      ranks.unpersist(blocking = false)
-      rankRdds.foreach(_.unpersist(blocking = false))
+      val next = nodes.join(contrib, nodes("node") === contrib("cnode"), "left")
+        .select(col("node"),
+          (lit(base) + expr(
+            s"(cast($dampNum as decimal(38,0)) * cast(coalesce(cs, 0) as decimal(38,0)))" +
+              s" div cast($dampDen as decimal(38,0))")).as("r"))
+        .localCheckpoint(eager = true)
+      Snapshots.release(ranks)
       ranks = next
-      rankRdds = nextRdds
     }
-    ewoRdds.foreach(_.unpersist(blocking = false))
-    nodeRdds.foreach(_.unpersist(blocking = false))
+    Snapshots.release(ewo)
+    Snapshots.release(nodes)
     ranks.select(col("node"), col("r").as("rank_score"))
   }
 }

@@ -6,6 +6,7 @@ import org.apache.spark.sql.expressions.Window
 
 import graft.Tables._
 import graft.functions.VectorExpressions
+import graft.ops.Snapshots
 import Num.{sumD, avgD}
 
 /** LLM-training-data pipeline operators (the north-star extension surface,
@@ -260,7 +261,7 @@ object LlmOps {
     *
     * Keyed on the engine-portable 30-bit [[VectorExpressions.PolySimHash]]
     * (3×10-bit bands) so the oracle recomputes identical signatures in
-    * plain integer SQL (round-3 verdict item 1); restricted to lang='en'
+    * plain integer SQL; restricted to lang='en'
     * for BMP char-code parity. The production 64-bit xxhash64 variant
     * ([[VectorExpressions.SimHash64]], 4×16-bit bands) keeps its
     * structural coverage in SimHashSpec.
@@ -354,8 +355,8 @@ object LlmOps {
     * → 8 bands): scan → explode(8) → one (band, bucket) shuffle.
     *
     * Keyed on the engine-portable PolyHash family so the DuckDB oracle
-    * recomputes the identical 64 minima and band folds (round-3 verdict
-    * item 1); lang='en' for char-code parity. The xxhash64 production
+    * recomputes the identical 64 minima and band folds; lang='en' for
+    * char-code parity. The xxhash64 production
     * family keeps pair-level structural coverage in MinHashSpec.
     */
   def q37MinhashBands(s: SparkSession, d: String): DataFrame = {
@@ -382,7 +383,7 @@ object LlmOps {
        |$bandStatsSql""".stripMargin
   }
 
-  /** Pair-level LSH dedup END-TO-END (round-3 verdict item 2): the full
+  /** Pair-level LSH dedup END-TO-END: the full
     * [[MinHash.candidatePairs]] product operator — signature scan, explode
     * ×8 bands, (band, bucket) shuffle, degenerate-bucket guard
     * (maxBucket=100), per-bucket self-join, pair dedup, estimator filter
@@ -564,12 +565,12 @@ object LlmOps {
     val base = documents(s, d)
       .filter(col("lang") === "en" && col("source") === "src0" && size(t) >= 2)
       .select(col("doc_id"), grams.as("grams"))
-    // Exact-Jaccard leg, INVERTED-INDEX-shaped (round 17): the previous
-    // all-pairs theta-join compared every gram array pairwise —
-    // quadratic in the slice even when almost no pair shares a gram
-    // (the 30× scale gate's timeout). Candidates are now pairs sharing
-    // ≥ 1 bigram (a Jaccard ≥ 0.5 pair always does; grams are non-empty
-    // under size(t) >= 2), counted via one gram-keyed equi-join —
+    // Exact-Jaccard leg, INVERTED-INDEX-shaped: an all-pairs theta-join
+    // would compare every gram array pairwise — quadratic in the slice
+    // even when almost no pair shares a gram (it times the 30× scale
+    // gate out). Candidates are pairs sharing ≥ 1 bigram (a Jaccard
+    // ≥ 0.5 pair always does; grams are non-empty under size(t) >= 2),
+    // counted via one gram-keyed equi-join —
     // Σ df(gram)² work, which is the TRUE pair mass instead of n²/2.
     // grams are distinct ([[graft.functions.MinHash.shingles]]), so
     // |∪| = sza + szb − inter and `2·|∩| ≥ |∪|` ⇔ `3·inter ≥ sza+szb` —
@@ -597,15 +598,15 @@ object LlmOps {
   /** The q63/q72/q83/q125/q237 oracle chain through per-node min labels
     * (`lab`): pair generation replayed in SQL, then the component step
     * as a WITH RECURSIVE transitive closure. The exact-Jaccard leg runs
-    * inverted-index-shaped (round-17, the commit-9c8250d discipline):
-    * `jbase a JOIN jbase b ON a.doc_id < b.doc_id` compared every gram
-    * LIST pairwise — quadratic in the (en, src0) slice, which timed the
-    * 30× scale gate out — where the unnest⋈unnest co-occurrence count
-    * touches only pairs sharing a bigram. Bit-identical pair set: grams
-    * are list_distinct (sets), so |∪| = |A|+|B|−|∩| and the original
-    * `2·|∩| ≥ |∪|` is exactly `3·inter ≥ sza+szb`; a qualifying pair
-    * shares ≥ 1 gram (grams are non-empty under `len(t) >= 2`), so
-    * restricting candidates to co-occurring pairs drops nothing. */
+    * inverted-index-shaped: `jbase a JOIN jbase b ON a.doc_id < b.doc_id`
+    * would compare every gram LIST pairwise — quadratic in the (en,
+    * src0) slice, which times the 30× scale gate out — where the
+    * unnest⋈unnest co-occurrence count touches only pairs sharing a
+    * bigram. Bit-identical pair set: grams are list_distinct (sets), so
+    * |∪| = |A|+|B|−|∩| and the Jaccard rule `2·|∩| ≥ |∪|` is exactly
+    * `3·inter ≥ sza+szb`; a qualifying pair shares ≥ 1 gram (grams are
+    * non-empty under `len(t) >= 2`), so restricting candidates to
+    * co-occurring pairs drops nothing. */
   private def dedupClusterChainSql: String =
     s"""$lshPairChainSql,
        |lsh AS (SELECT id_a, id_b FROM est WHERE est_jaccard >= 0.5),
@@ -650,17 +651,17 @@ object LlmOps {
     * gate hashes exact integers.
     *
     * Scale shape: edges + components as q63; the join strategy against
-    * the removal set is SIZE-GUARDED, not forced (round-7 verdict task
-    * 2): no broadcast hint — AQE observes the removal set's true runtime
-    * size (the components output is already materialized by the loop's
-    * localCheckpoints, so the size is real, not an estimate) and
-    * converts the join to a map-side broadcast exactly when the set fits
-    * the broadcast threshold. On a typical corpus (duplicates ≪ corpus)
-    * that yields the same map-side plan the old forced hint produced; on
-    * a raw web crawl where 30–50% duplicate rates make the removal set
-    * billions of rows, the forced broadcast would OOM every executor,
-    * and the guard instead leaves a plain shuffled join. DedupPurgeSpec
-    * pins both sides of the guard.
+    * the removal set is SIZE-GUARDED, not forced: no broadcast hint —
+    * AQE observes the removal set's true runtime size (the components
+    * output is already materialized by the loop's localCheckpoints, so
+    * the size is real, not an estimate) and converts the join to a
+    * map-side broadcast exactly when the set fits the broadcast
+    * threshold. On a typical corpus (duplicates ≪ corpus) that yields the
+    * same map-side plan a forced hint would; on a raw web crawl where
+    * 30–50% duplicate rates make the removal set billions of rows, the
+    * forced broadcast would OOM every executor, and the guard instead
+    * leaves a plain shuffled join. DedupPurgeSpec pins both sides of the
+    * guard.
     */
   def q72DedupPurge(s: SparkSession, d: String): DataFrame = {
     val removed = graft.ops.ConnectedComponents
@@ -712,8 +713,8 @@ object LlmOps {
       .assign(dedupEdges(s, d), "id_a", "id_b")
       .select(col("node").as("doc_id"), col("cluster_id"))
     // logits are consumed ONLY for cluster members (the inner join
-    // below), so score just those docs (round-20, guide §2.3 — don't
-    // tokenize the 100 TB corpus to rank the ≪corpus duplicate set):
+    // below), so score just those docs (don't tokenize the 100 TB corpus
+    // to rank the ≪corpus duplicate set):
     // the semi join against the already-materialized member labels
     // prunes the explode+hash pass to cluster members before it runs
     val lg = qualityLogits(documents(s, d)
@@ -1113,8 +1114,8 @@ object LlmOps {
     * the corpus. Pairwise IS quadratic WITHIN a cell, so cells larger than
     * `maxCell` are excluded from the join rather than allowed to blow up
     * one task quadratically (the same degenerate-cluster guard as
-    * [[graft.functions.MinHash.candidatePairs]]'s maxBucket; round-3
-    * verdict item 6). Per surviving cell: pair count, count above the
+    * [[graft.functions.MinHash.candidatePairs]]'s maxBucket). Per
+    * surviving cell: pair count, count above the
     * near-dup threshold, and the maximum pair similarity (max is
     * order-independent, so rounding after max is deterministic).
     */
@@ -1228,14 +1229,14 @@ object LlmOps {
 
   // --- Semantic dedup (q77) ----------------------------------------------
 
-  /** Corpus-proportional centroid seeding (round 16): every
+  /** Corpus-proportional centroid seeding: every
     * [[SemDedupSeedStride]]-th vec_id seeds a cell, so K ≈ n/stride GROWS
     * with the corpus and the MEAN cell density stays ~stride at every
     * scale — the within-cell pairwise legs (Σ|cell|²) are then linear in
-    * corpus size by construction, not merely guard-bounded. The fixed
-    * K=8 this replaces made density grow with n (the r15 sf1 stress
-    * measured q77 ~29× at 10×); with stride seeding the 10× fixture gets
-    * 10× the cells at the same density. Seeds stay deterministic and
+    * corpus size by construction, not merely guard-bounded. A fixed K
+    * would make density grow with n (K=8 measured q77 at ~29× cost on
+    * the 10× fixture); with stride seeding the 10× fixture gets 10× the
+    * cells at the same density. Seeds stay deterministic and
     * engine-portable: `vec_id % stride = 0` is one predicate in both the
     * Spark plan and the DuckDB oracle CTE, so K can never drift between
     * engine and oracle. At 100 TB the same rule holds (a 10¹⁰-vector
@@ -1256,10 +1257,10 @@ object LlmOps {
     * `round(csim · 2⁴⁰)` BEFORE the (csim, cell_id) ordering on BOTH
     * engines, so the assignment never depends on last-ULP agreement
     * between the JVM accumulation loop and DuckDB's
-    * `list_cosine_similarity` (round-16 advice: one ULP flip at a full-
-    * precision near-tie would re-cell a vector and hash-mismatch the
-    * gate). A power-of-two grid keeps even the scaling multiply exact
-    * on any IEEE engine; a flip now needs the two engines' cosines to
+    * `list_cosine_similarity` (one ULP flip at a full-precision
+    * near-tie would re-cell a vector and hash-mismatch the gate). A
+    * power-of-two grid keeps even the scaling multiply exact on any
+    * IEEE engine; a flip now needs the two engines' cosines to
     * straddle a 2⁻⁴⁰ ≈ 9·10⁻¹³ boundary AND the top-2 cells to land on
     * adjacent grid points — and an exact grid TIE breaks on cell_id
     * identically everywhere. */
@@ -1271,9 +1272,9 @@ object LlmOps {
     * partials collapse map-side. The N×K candidate rows carry ONLY the
     * 16-byte (csim, cell_id) ordering struct — never the embedding;
     * with corpus-proportional K the candidate leg is n·K = n²/stride
-    * rows, and dragging a 64-float array copy through each (the
-    * round-15 max_by formulation) made the argmax allocation-bound at
-    * 30× (GC-driven 10× run-to-run variance on q139's sweep). The
+    * rows, and dragging a 64-float array copy through each (a max_by
+    * formulation) makes the argmax allocation-bound at 30× (GC-driven
+    * 10× run-to-run variance on q139's sweep). The
     * embedding and any kept columns re-attach via one vec_id equi-join
     * against the assignment's own exchange — linear, columnar, and
     * cheap where the struct copies were quadratic. The ordering key is
@@ -3187,8 +3188,8 @@ object LlmOps {
     // integer cell stats: component sums (direction of the centroid),
     // their norm, and member counts — the member count rides the SAME
     // (label, dim) aggregate (every vector contributes one row per dim,
-    // so any dim's row count IS the cell population; round-20: the
-    // separate corpus-scanning cellCnt aggregate and its join are gone)
+    // so any dim's row count IS the cell population — no separate
+    // corpus-scanning count aggregate and join)
     val cellSums = e
       .select(col("label"), posexplode(col("embedding")).as(Seq("dim", "x")))
       .groupBy("label", "dim")
@@ -3245,7 +3246,7 @@ object LlmOps {
     // the per-p spine: `ranked` always has cell_rank=1 per query, so
     // exploding to SweepMaxProbe covers EVERY probe width even when a
     // width retrieves zero candidates (e.g. the query's best cell is
-    // its own singleton) — the round-11 dropped-row bug.
+    // its own singleton), so no width's row can drop out.
     val cost = ranked
       .withColumn("p", explode(sequence(col("cell_rank"), lit(SweepMaxProbe))))
       .groupBy("p").agg(sum(col("n_cell")).as("scanned"))
@@ -3439,13 +3440,19 @@ object LlmOps {
     bpeTrain(docs = documents(s, d))
 
   /** Core of q109 over any frame with a `text` column — see q109 scaladoc. */
-  private[queries] def bpeTrain(docs: DataFrame): DataFrame =
-    bpeTrainCore(docs)._1
+  private[queries] def bpeTrain(docs: DataFrame): DataFrame = {
+    val (merges, state) = bpeTrainCore(docs)
+    Snapshots.release(state)
+    merges
+  }
 
   /** The trainer loop, returning BOTH artifacts: the merge-rule table
-    * (q109's output) and the final rewritten symbol table — which IS the
-    * encoded corpus at word-type granularity (q118 aggregates it). One
-    * loop, two consumers; the state frames are lineage-cut per round.
+    * (q109's output, a driver-side frame) and the final rewritten symbol
+    * table — which IS the encoded corpus at word-type granularity (q118
+    * aggregates it). One loop, two consumers; the state frames are
+    * lineage-cut per round and each superseded round is released. The
+    * returned state is a snapshot the caller owns: release it unless the
+    * caller's result reads it.
     */
   private def bpeTrainCore(docs: DataFrame): (DataFrame, DataFrame) = {
     import org.apache.spark.sql.expressions.Window
@@ -3453,32 +3460,15 @@ object LlmOps {
     val wSeq = Window.partitionBy("w").orderBy("pos")
     val wRn = Window.partitionBy("w").orderBy("rn")
 
-    // tracked eager checkpoint (round-20 — the FULL ConnectedComponents
-    // discipline, not just the lineage cut): each round's symbol table
-    // supersedes the previous one, and Dataset.unpersist does not free
-    // checkpoint blocks, so without explicit RDD release the loop left
-    // every round's vocabulary-sized frame in storage memory for the
-    // rest of the process — block pressure billed to whatever query ran
-    // next in an interleaved bench.
-    def checkpointTracked(df: DataFrame)
-        : (DataFrame, Seq[org.apache.spark.rdd.RDD[_]]) = {
-      val sc = df.sparkSession.sparkContext
-      val before = sc.getPersistentRDDs.keySet
-      val out = df.localCheckpoint(eager = true)
-      val added = sc.getPersistentRDDs.collect {
-        case (id, r) if !before.contains(id) => r
-      }.toSeq
-      (out, added)
-    }
-
-    var (state, stateRdds) = checkpointTracked(docs
+    var state = docs
       .select(explode(toks(lower(col("text")))).as("w"))
       .filter(length(col("w")) >= 1)
       .groupBy("w").agg(count(lit(1)).as("f"))
       .select(col("w"), col("f"),
         explode(sequence(lit(1), length(col("w")) + 1)).as("pos"))
       .withColumn("sym", expr(
-        "CASE WHEN pos <= length(w) THEN substring(w, pos, 1) ELSE '</w>' END")))
+        "CASE WHEN pos <= length(w) THEN substring(w, pos, 1) ELSE '</w>' END"))
+      .localCheckpoint(eager = true)
 
     val merges = Seq.newBuilder[(Long, String, String, Long, Long)]
     var r = 1
@@ -3496,7 +3486,7 @@ object LlmOps {
       else {
         val (a, b) = (best(0).getString(0), best(0).getString(1))
         merges += ((r.toLong, a, b, best(0).getLong(2), best(0).getLong(3)))
-        val (next, nextRdds) = checkpointTracked(p
+        val next = p
           .withColumn("elig", col("sym") === lit(a) && col("nxt") === lit(b))
           .withColumn("isl", when(col("elig"), col("rn") -
             row_number().over(Window.partitionBy("w", "elig").orderBy("rn"))))
@@ -3505,12 +3495,10 @@ object LlmOps {
           .withColumn("prev_take", lag(col("take"), 1).over(wRn))
           .filter(!coalesce(col("prev_take"), lit(false)))
           .select(col("w"), col("f"), col("pos"),
-            when(col("take"), lit(a + b)).otherwise(col("sym")).as("sym")))
-        // the eager checkpoint above has materialized `next`; the
-        // superseded round's blocks can be released immediately
-        stateRdds.foreach(_.unpersist(blocking = false))
+            when(col("take"), lit(a + b)).otherwise(col("sym")).as("sym"))
+          .localCheckpoint(eager = true)
+        Snapshots.release(state)
         state = next
-        stateRdds = nextRdds
         r += 1
       }
     }
@@ -3741,22 +3729,22 @@ object LlmOps {
     * frequency. Downstream, the flagged shingles are exactly the removal
     * list a C4-style line-dedup pass consumes.
     *
-    * Shape (round 9, de-sorted): gram document frequencies come from a
+    * Shape (de-sorted): gram document frequencies come from a
     * `groupBy(source, g)` — a pure HASH exchange with map-side partial
     * aggregation — and the (doc, gram) incidence stream is then joined
     * back to the df≥[[BoilerMinDf]] gram set with a SHUFFLE_HASH hint,
-    * so no stage ever sorts the corpus-sized shingle stream. (The
-    * previous formulation used `count().over(Window.partitionBy(source,
-    * g))`, which dragged a corpus-sized SORT into the window exchange —
-    * at 100 TB that sort, not the hash, is the bottleneck; see VERDICT
-    * round 8.) The cost shifted: the tokenize/shingle/explode subtree is
-    * evaluated twice (df side + probe side) — doubled map CPU bought
-    * zero corpus-wide sort/spill, the right trade at scale where sorts
-    * spill and CPU scales with executors. The hash build side is the
-    * df-guarded gram TYPE set (template mass only), orders of magnitude
-    * below shingle volume. Per-source doc totals come straight off the
-    * documents table (column-pruned scan of `source` only) and join the
-    * audit at sources cardinality.
+    * so no stage ever sorts the corpus-sized shingle stream. (A
+    * `count().over(Window.partitionBy(source, g))` formulation would drag
+    * a corpus-sized SORT into the window exchange — at 100 TB that sort,
+    * not the hash, is the bottleneck.) The price: the
+    * tokenize/shingle/explode subtree is evaluated twice (df side + probe
+    * side) — doubled map CPU bought zero corpus-wide sort/spill, the
+    * right trade at scale where sorts spill and CPU scales with
+    * executors. The hash build side is the df-guarded gram TYPE set
+    * (template mass only), orders of magnitude below shingle volume.
+    * Per-source doc totals come straight off the documents table
+    * (column-pruned scan of `source` only) and join the audit at sources
+    * cardinality.
     *
     * 100 TB: "source" is a registered domain (cardinality 10⁷⁺), so the
     * (source, shingle) partitioning is fine-grained and skew-free; the
@@ -4378,11 +4366,11 @@ object LlmOps {
     * neighbors; union symmetrization caps degree at 10 + incoming. */
   private val TriKnnK = 5
 
-  /** q139/q151 candidate-cell stride (round 16): the kNN graph's
+  /** q139/q151 candidate-cell stride: the kNN graph's
     * candidate blocks are (label × corpus-proportional cell), with one
     * seed per [[KnnCellStride]] vec_ids — the [[semCentroids]] rule at a
     * coarser stride, so the mean block is ~stride/|labels| (~25) members
-    * at EVERY corpus size. Label-only blocking densified under growth
+    * at EVERY corpus size. Label-only blocking densifies under growth
     * (each label block grows with n, the candidate join with n² — the
     * sf3 sweep measured q151 at exponent 1.52); with stride seeding the
     * block count grows with the corpus instead and Σ|block|² stays
@@ -4409,10 +4397,10 @@ object LlmOps {
     * rank window over (rounded sim DESC, id ASC), top-[[TriKnnK]] per
     * vector, symmetrized by UNION into undirected (lo, hi) edges.
     *
-    * Scale shape (round 16): the candidate join is density-PINNED, not
+    * Scale shape: the candidate join is density-PINNED, not
     * just guard-bounded — block count grows with the corpus while mean
     * block density stays ~stride/|labels|, so Σ|block|² is linear in n
-    * (label-only blocking densified: the sf3 sweep measured the graph
+    * (label-only blocking densifies: the sf3 sweep measured the graph
     * family at exponent 1.52); after it, everything is EDGE-sized with
     * bounded degree —
     * wedges ≤ n·C(deg,2), and the triangle join is the ordered-adjacency
@@ -4499,10 +4487,9 @@ object LlmOps {
     * struct); BOTH cosine legs use `list_cosine_similarity` on DOUBLE[]
     * — the sims leg rounds at 4 dp and the assignment leg at the 2⁴⁰
     * grid, so neither depends on last-ULP agreement between DuckDB's
-    * kernel and the JVM loop (round-16 advice closed). The
-    * unnest form materialized n·K·64 assignment rows — ~900M at 30×,
-    * which timed the sf3 oracle out; the list form stays per-pair-row
-    * and completes. */
+    * kernel and the JVM loop. An unnest form would materialize n·K·64
+    * assignment rows — ~900M at 30×, which times the sf3 oracle out;
+    * the list form stays per-pair-row and completes. */
   private val KnnEdgeCtes: String =
     s"""kc AS (SELECT vec_id AS cell_id, embedding AS c_emb
        |       FROM embeddings WHERE vec_id % $KnnCellStride = 0),
@@ -4827,7 +4814,7 @@ object LlmOps {
     * vectors, and the worst similarity (max before round — order-
     * independent, the q42 discipline).
     *
-    * Scale shape (round 16, corpus-proportional): the candidate block is
+    * Scale shape (corpus-proportional): the candidate block is
     * the INTERSECTION of the label cell with the corpus-proportional
     * [[semCentroids]] embedding cell — the SemDeDup approximation applied
     * to decontamination. A fixed label vocabulary densifies under corpus
@@ -4925,9 +4912,8 @@ object LlmOps {
     */
   def q188LenBandSpearman(s: SparkSession, d: String): DataFrame = {
     def big(c: Column): Column = c.cast("decimal(38,0)")
-    // ONE corpus pipeline (round-20, guide §1.1/§2.3): the old shape
-    // re-derived the (lang, len, band) histogram three times (main +
-    // both rank legs) from three corpus explodes. Now: (lang, len) ride
+    // ONE corpus pipeline, not one (lang, len, band) histogram per leg
+    // (main + both rank legs) from three corpus explodes: (lang, len) ride
     // the doc→word aggregate (functional dependency of doc_id — same
     // groups, no second corpus scan, no doc_id join), the vocab join
     // probes distinct (doc, word) counts instead of raw tokens (the
@@ -5878,8 +5864,8 @@ object LlmOps {
     fs.create(p(s"$dir/_SUCCESS")).close()
   }
 
-  /** q238: INCREMENTAL IVF INDEX MAINTENANCE — the round-13 gap closed:
-    * q205's maintained ANN layout gains the batch_id protocol already
+  /** q238: INCREMENTAL IVF INDEX MAINTENANCE — q205's maintained ANN
+    * layout gains the batch_id protocol already
     * proven on MinHash (q79) and BM25 (q211), so a live embedding
     * corpus absorbs a snapshot WITHOUT republishing the index. The
     * layout decomposes into the frozen centroid table plus
@@ -6210,10 +6196,9 @@ object LlmOps {
   /** PQ index-layout version tag. */
   private val PqIdxTag = "v1"
 
-  /** q244: MAINTAINED PQ LAYOUT + ADC PROBE — the deployment shape the
-    * q210 acceptance argument promised (BASELINE round-13: "a
-    * deployment trains offline and publishes the 128-row codebook as a
-    * layout, the q205 protocol"), now real and gated: the codebook and
+  /** q244: MAINTAINED PQ LAYOUT + ADC PROBE — the deployment shape of
+    * q210 (a deployment trains offline and publishes the 128-row
+    * codebook as a layout, the q205 protocol), gated: the codebook and
     * the PACKED CODE TABLE (one `array<int>` of [[PqM]] 4-bit codes
     * per vector — the 64× bandwidth cut against raw embeddings)
     * publish once as a maintained layout through the SAME training
@@ -6234,17 +6219,16 @@ object LlmOps {
     import org.apache.spark.sql.expressions.Window
     val tag = Layouts.srcTag(s, d, "embeddings")
     val dir = Layouts.ensureDir(s, s"pqidx_${PqIdxTag}_$tag") { tmp =>
-      val full = embeddings(s, d)
-        .select(col("vec_id"), pqQuant(col("embedding")).as("qe"))
-        .localCheckpoint(true)
-      val sv = pqSubvectors(full)
-      val cents = pqCodebook(sv)
-      cents.write.parquet(s"$tmp/codebook")
-      pqCodes(sv, s.read.parquet(s"$tmp/codebook"))
-        .groupBy("vec_id")
-        .agg(transform(array_sort(collect_list(struct(col("m"), col("code")))),
-          p => p("code").cast("int")).as("codes"))
-        .write.parquet(s"$tmp/codes")
+      Snapshots.using(embeddings(s, d)
+          .select(col("vec_id"), pqQuant(col("embedding")).as("qe"))) { full =>
+        val sv = pqSubvectors(full)
+        pqCodebook(sv).write.parquet(s"$tmp/codebook")
+        pqCodes(sv, s.read.parquet(s"$tmp/codebook"))
+          .groupBy("vec_id")
+          .agg(transform(array_sort(collect_list(struct(col("m"), col("code")))),
+            p => p("code").cast("int")).as("codes"))
+          .write.parquet(s"$tmp/codes")
+      }
       val p = new org.apache.hadoop.fs.Path(tmp, "_SUCCESS")
       p.getFileSystem(s.sparkContext.hadoopConfiguration).create(p).close()
     }
@@ -6356,16 +6340,17 @@ object LlmOps {
         .agg(expr("sum(qx) DIV count(1)").as("cq"))
         .write.parquet(s"$tmp/cents")
       // fine quantizer: the q210-certified PQ builders
-      val full = e.select(col("vec_id"), col("label").as("cell"),
-        pqQuant(col("embedding")).as("qe")).localCheckpoint(true)
-      val sv = pqSubvectors(full)
-      pqCodebook(sv).write.parquet(s"$tmp/codebook")
-      pqCodes(sv, s.read.parquet(s"$tmp/codebook"))
-        .groupBy("vec_id")
-        .agg(transform(array_sort(collect_list(struct(col("m"), col("code")))),
-          p => p("code").cast("int")).as("codes"))
-        .join(full.select("vec_id", "cell"), Seq("vec_id"))
-        .write.partitionBy("cell").parquet(s"$tmp/codes")
+      Snapshots.using(e.select(col("vec_id"), col("label").as("cell"),
+          pqQuant(col("embedding")).as("qe"))) { full =>
+        val sv = pqSubvectors(full)
+        pqCodebook(sv).write.parquet(s"$tmp/codebook")
+        pqCodes(sv, s.read.parquet(s"$tmp/codebook"))
+          .groupBy("vec_id")
+          .agg(transform(array_sort(collect_list(struct(col("m"), col("code")))),
+            p => p("code").cast("int")).as("codes"))
+          .join(full.select("vec_id", "cell"), Seq("vec_id"))
+          .write.partitionBy("cell").parquet(s"$tmp/codes")
+      }
       // multi-subtree layout: stamp the root marker last
       val p = new org.apache.hadoop.fs.Path(tmp, "_SUCCESS")
       p.getFileSystem(s.sparkContext.hadoopConfiguration).create(p).close()
@@ -6526,17 +6511,18 @@ object LlmOps {
       .agg(expr("sum(qx) DIV count(1)").as("cq"))
       .write.parquet(s"$tmp/cents")
     // FROZEN PQ codebook: trained on the BASE slice only
-    val bfull = base.select(col("vec_id"), col("label").as("cell"),
-      pqQuant(col("embedding")).as("qe")).localCheckpoint(true)
-    val bsv = pqSubvectors(bfull)
-    pqCodebook(bsv).write.parquet(s"$tmp/codebook")
-    // base generation of the code table
-    pqCodes(bsv, s.read.parquet(s"$tmp/codebook"))
-      .groupBy("vec_id")
-      .agg(transform(array_sort(collect_list(struct(col("m"), col("code")))),
-        p => p("code").cast("int")).as("codes"))
-      .join(bfull.select("vec_id", "cell"), Seq("vec_id"))
-      .write.partitionBy("cell").parquet(s"$tmp/codes/batch_id=0")
+    Snapshots.using(base.select(col("vec_id"), col("label").as("cell"),
+        pqQuant(col("embedding")).as("qe"))) { bfull =>
+      val bsv = pqSubvectors(bfull)
+      pqCodebook(bsv).write.parquet(s"$tmp/codebook")
+      // base generation of the code table
+      pqCodes(bsv, s.read.parquet(s"$tmp/codebook"))
+        .groupBy("vec_id")
+        .agg(transform(array_sort(collect_list(struct(col("m"), col("code")))),
+          p => p("code").cast("int")).as("codes"))
+        .join(bfull.select("vec_id", "cell"), Seq("vec_id"))
+        .write.partitionBy("cell").parquet(s"$tmp/codes/batch_id=0")
+    }
   }
 
   /** The shared IVFADC presentation tail: per-query top-[[IvfIdxTopK]]
@@ -6834,8 +6820,7 @@ object LlmOps {
     * ORACLED trigger column `rebuild_due` (recall below
     * [[IvfRebuildMinRecallPpm]]) that [[ivfAdcRebuildIfDrifted]]
     * consumes — drift → trip → rebuild → re-point, the q258 loop closed
-    * on the IVFADC layout too (round-17 verdict item 6; IvfAdcDriftSpec
-    * pins the whole cycle).
+    * on the IVFADC layout too (IvfAdcDriftSpec pins the whole cycle).
     *
     * Scale: the exact leg is |panel|·corpus with a broadcast panel (the
     * q106/q210 ground-truth posture — the audit is scheduled QA, not a
@@ -6893,12 +6878,11 @@ object LlmOps {
       .orderBy("batch_id")
   }
 
-  /** Rebuild trigger for the frozen-quantizer IVFADC layouts (round-17
-    * verdict item 6 — the q258 loop closed on the semantic index, now
-    * mirrored here): a generation whose cell-pruned-probe recall falls
-    * below this ppm threshold holds vectors the frozen centroids +
-    * codebook can no longer represent — the audit row says so
-    * ([[ivfAdcDriftAudit]]'s `rebuild_due`), and
+  /** Rebuild trigger for the frozen-quantizer IVFADC layouts (the q258
+    * loop on the semantic index, mirrored here): a generation whose
+    * cell-pruned-probe recall falls below this ppm threshold holds
+    * vectors the frozen centroids + codebook can no longer represent —
+    * the audit row says so ([[ivfAdcDriftAudit]]'s `rebuild_due`), and
     * [[ivfAdcRebuildIfDrifted]] acts on it. 0.05 sits well under the
     * registered corpus's per-generation recalls (~0.08–0.16 at the gate
     * scale factors — random-embedding ANN recall is inherently modest)
@@ -7177,11 +7161,10 @@ object LlmOps {
     */
   def q208DedupRing(s: SparkSession, d: String): DataFrame = {
     def legStats(name: String, pairs: DataFrame): DataFrame =
-      // ONE evaluation of the leg's pair chain: the old shape (count
-      // aggregate crossJoin'd with a distinct-count over a two-sided
-      // union) physically replicated the whole leg plan THREE times —
-      // 38 parquet scans / 136 Exchanges across the ring at sf0.001
-      // (plans/r19/q208_dedup_ring_before.txt). Exploding each pair
+      // ONE evaluation of the leg's pair chain: a count aggregate
+      // crossJoin'd with a distinct-count over a two-sided union would
+      // physically replicate the whole leg plan THREE times (38 parquet
+      // scans / 136 Exchanges across the ring at sf0.001). Exploding each pair
       // into its two endpoints makes both stats one aggregate over one
       // pass: n_pairs = rows DIV 2 (every pair contributes exactly 2),
       // n_docs = distinct endpoints. Guide §1.2 step 1 / §2.4.
@@ -7289,9 +7272,9 @@ object LlmOps {
     * never text) consumed by exactly ONE pipeline: the packing cumsum
     * rides a conditional window over the full frame and the funnel
     * count_ifs ride the per-(source, bin) aggregate, so no eager
-    * materialization exists anywhere in the plan (round-20; the former
-    * localCheckpoint paid a corpus-sized block-manager write per
-    * invocation — the q173 anti-scaling mechanism).
+    * materialization exists anywhere in the plan (a localCheckpoint
+    * would pay a corpus-sized block-manager write per invocation — the
+    * q173 anti-scaling mechanism).
     */
   def q237TextCuration(s: SparkSession, d: String): DataFrame = {
     val docs = documents(s, d)
@@ -7337,12 +7320,11 @@ object LlmOps {
       .withColumn("s2", col("keep_exact") && col("keep_near"))
       .withColumn("s3", col("s2") && col("keep_qual"))
       .withColumn("s4", col("s3") && col("keep_mix"))
-    // FUSED ledger+packing (round-20, guide §1.1/§2.4): the decision
-    // frame used to be eagerly checkpointed because TWO consumers read
-    // it (the ledger aggregate and the packing window) — a per-invocation
-    // corpus-sized block-manager materialization whose blocks outlive
-    // the invocation (the q173 anti-scaling mechanism). Instead the plan
-    // is restructured so flags has ONE consumer: the packing cumsum runs
+    // FUSED ledger+packing: TWO consumers of the decision frame (the
+    // ledger aggregate and the packing window) would need an eager
+    // checkpoint — a per-invocation corpus-sized block-manager
+    // materialization (the q173 anti-scaling mechanism). Instead the
+    // plan is shaped so flags has ONE consumer: the packing cumsum runs
     // over the FULL frame as a conditional window sum (non-survivors
     // contribute 0, so an s4 row's cum equals the survivor-only prefix
     // packedBins computes — same doc_id order, same (cum−ntok) DIV
@@ -7637,7 +7619,7 @@ object LlmOps {
   /** Version + parameter token baked into BOTH maintained semantic-index
     * layout names — the q255 batch index (`semidx_`) and the q257
     * streaming layout (`semstr_`) share the ONE val so they can never
-    * drift (round-16 advice): a layout populated under a different
+    * drift: a layout populated under a different
     * stride, tau, cell bound, snapshot split BOUNDARY, modulus, or
     * argmax grid must never satisfy either reuse path. Every token is
     * DERIVED from the constant it guards (t = tau·100, b = the base/new
@@ -7801,44 +7783,44 @@ object LlmOps {
   private[graft] def semIncrAppendDelta(s: SparkSession, batch: DataFrame,
       root: String, gen: Long, maxCell: Long = SemDedupMaxCell): Unit = {
     val cents = s.read.parquet(s"$root/cents")
-    val nw = assignCells(batch.select("vec_id", "embedding"), cents)
-      .select(col("cell_id"), col("vec_id"), col("embedding"))
-      .localCheckpoint(eager = true)
-    val prior = s.read.parquet(s"$root/members")
-      .filter(col("batch_id") < gen)
-      .select("cell_id", "vec_id", "embedding", "batch_id")
-    val occ = prior.select("cell_id").unionAll(nw.select("cell_id"))
-      .groupBy("cell_id").agg(count(lit(1)).as("occ"))
-      .filter(col("occ") <= maxCell).select("cell_id")
-    val nwOk = nw.join(occ, Seq("cell_id"))
-    // joining on cell_id already restricts the prior side to passing
-    // cells (nwOk's cells all pass) — no second guard join needed
-    val vsPrior = nwOk
-      .select(col("cell_id"), col("vec_id").as("na"), col("embedding").as("ea"))
-      .join(prior.select(col("cell_id"), col("vec_id").as("ob"),
-        col("embedding").as("eb"), col("batch_id")), Seq("cell_id"))
-      .select(col("cell_id"),
-        least(col("na"), col("ob")).as("id_a"),
-        greatest(col("na"), col("ob")).as("id_b"),
-        when(col("batch_id") === 0L, lit("new_old"))
-          .otherwise(lit("new_new")).as("kind"),
-        VectorExpressions.cosine(col("ea"), col("eb")).as("sim"))
-    val intra = nwOk
-      .select(col("cell_id"), col("vec_id").as("na"), col("embedding").as("ea"))
-      .join(nwOk.select(col("cell_id"), col("vec_id").as("nb"),
-        col("embedding").as("eb")), Seq("cell_id"))
-      .filter(col("na") < col("nb"))
-      .select(col("cell_id"), col("na").as("id_a"), col("nb").as("id_b"),
-        lit("new_new").as("kind"),
-        VectorExpressions.cosine(col("ea"), col("eb")).as("sim"))
-    vsPrior.unionAll(intra)
-      .filter(col("sim") >= IncrSemTau)
-      .select(col("id_a"), col("id_b"), col("kind"),
-        col("cell_id").cast("long").as("cell_id"),
-        round(col("sim"), 4).as("sim"))
-      .write.mode("overwrite").parquet(s"$root/pairs/batch_id=$gen")
-    nw.select("cell_id", "vec_id", "embedding")
-      .write.mode("overwrite").parquet(s"$root/members/batch_id=$gen")
+    Snapshots.using(assignCells(batch.select("vec_id", "embedding"), cents)
+        .select(col("cell_id"), col("vec_id"), col("embedding"))) { nw =>
+      val prior = s.read.parquet(s"$root/members")
+        .filter(col("batch_id") < gen)
+        .select("cell_id", "vec_id", "embedding", "batch_id")
+      val occ = prior.select("cell_id").unionAll(nw.select("cell_id"))
+        .groupBy("cell_id").agg(count(lit(1)).as("occ"))
+        .filter(col("occ") <= maxCell).select("cell_id")
+      val nwOk = nw.join(occ, Seq("cell_id"))
+      // joining on cell_id already restricts the prior side to passing
+      // cells (nwOk's cells all pass) — no second guard join needed
+      val vsPrior = nwOk
+        .select(col("cell_id"), col("vec_id").as("na"), col("embedding").as("ea"))
+        .join(prior.select(col("cell_id"), col("vec_id").as("ob"),
+          col("embedding").as("eb"), col("batch_id")), Seq("cell_id"))
+        .select(col("cell_id"),
+          least(col("na"), col("ob")).as("id_a"),
+          greatest(col("na"), col("ob")).as("id_b"),
+          when(col("batch_id") === 0L, lit("new_old"))
+            .otherwise(lit("new_new")).as("kind"),
+          VectorExpressions.cosine(col("ea"), col("eb")).as("sim"))
+      val intra = nwOk
+        .select(col("cell_id"), col("vec_id").as("na"), col("embedding").as("ea"))
+        .join(nwOk.select(col("cell_id"), col("vec_id").as("nb"),
+          col("embedding").as("eb")), Seq("cell_id"))
+        .filter(col("na") < col("nb"))
+        .select(col("cell_id"), col("na").as("id_a"), col("nb").as("id_b"),
+          lit("new_new").as("kind"),
+          VectorExpressions.cosine(col("ea"), col("eb")).as("sim"))
+      vsPrior.unionAll(intra)
+        .filter(col("sim") >= IncrSemTau)
+        .select(col("id_a"), col("id_b"), col("kind"),
+          col("cell_id").cast("long").as("cell_id"),
+          round(col("sim"), 4).as("sim"))
+        .write.mode("overwrite").parquet(s"$root/pairs/batch_id=$gen")
+      nw.select("cell_id", "vec_id", "embedding")
+        .write.mode("overwrite").parquet(s"$root/members/batch_id=$gen")
+    }
   }
 
   /** The streaming layout rides the SAME derived parameter token as the
@@ -7885,8 +7867,8 @@ object LlmOps {
     // current occupancy, so a cell crossing the bound mid-stream keeps
     // its earlier generations' pairs where a batch q255 run (and the
     // oracle this gate hashes against) would exclude the whole cell.
-    // Round-16 advice: the registration silently depended on it never
-    // happening — now the probe PROVES it per run and fails loudly with
+    // The registration depends on it never happening, so the probe
+    // PROVES it per run and fails loudly with
     // the rebuild action otherwise (a crossed layout is q259-drift-class
     // state: rebuild from base + generations, republish, re-point).
     val crossed = s.read.parquet(s"$dir/members")
@@ -7913,7 +7895,7 @@ object LlmOps {
     * cosine sum, sign-factored mean, and the min/max envelope. One
     * members scan + a broadcast of the (tiny) seed table; the rollup
     * is map-combinable into |generations| rows. */
-  /** Rebuild trigger (round-17: the drift audit finally CONSUMED): a
+  /** Rebuild trigger (the consumer of the drift audit): a
     * generation whose MEAN frozen-centroid cosine falls below this ppm
     * threshold is assigned against seeds that no longer describe it —
     * the audit row says so ([[semDriftAudit]]'s `rebuild_due`), and
@@ -7944,8 +7926,8 @@ object LlmOps {
       .orderBy("generation")
   }
 
-  /** THE REBUILD ACTION the drift audit triggers (round-16 verdict item
-    * 7 — q252/q258 measured drift but nothing consumed it): re-seed
+  /** THE REBUILD ACTION the drift audit triggers (q252/q258 measure
+    * drift; this consumes it): re-seed
     * centroids from base + every landed generation (the same
     * [[SemDedupSeedStride]] rule, now over the UNION corpus), re-assign
     * everything as generation 0 of a FRESH layout at `out`, and leave
@@ -8053,11 +8035,11 @@ object LlmOps {
     * (at d=64) upper-triangle cells in flat long arrays, then 2080
     * partial rows per PARTITION into one tiny final aggregate. This is
     * the documented imperative seam (the Misra-Gries precedent,
-    * `Corpus.scala` q85) replacing the round-16 formulation that
-    * exploded 2080 structs per VECTOR through nested transform/slice
-    * lambdas — same exact arithmetic, but the allocation storm (~2080·N
-    * materialized struct rows feeding the hash aggregate) becomes a
-    * register-resident multiply-add loop; measured ~10× on the audit.
+    * `Corpus.scala` q85) in place of exploding 2080 structs per VECTOR
+    * through nested transform/slice lambdas — same exact arithmetic,
+    * but the allocation storm (~2080·N materialized struct rows feeding
+    * the hash aggregate) becomes a register-resident multiply-add loop;
+    * measured ~10× on the audit.
     *
     * Exactness: quantization replicates `round(x·2²⁰)` half-away-from-
     * zero on the exact double ([[roundHalfAway]]); per-partition sums
@@ -8131,9 +8113,9 @@ object LlmOps {
   /** The SHARED co-moment matrix layout (q256 reads it, q259 iterates on
     * it, q260 ranks from it): the fused kernel's rollup published ONCE
     * per fixture generation under the [[graft.sources.Layouts]] protocol
-    * — round 16 paid the corpus co-moment pass TWICE per board (q259
-    * re-ran q256's aggregate); now the pair (and any future consumer)
-    * costs one scan total, and repeat Verify/Bench runs cost zero.
+    * — so the corpus co-moment pass is paid once, not once per
+    * consumer: the pair (and any future consumer) costs one scan total,
+    * and repeat Verify/Bench runs cost zero.
     * Stored raw (n/Σqᵢ/Σqⱼ/Σqᵢqⱼ, sums in decimal(38,0)) so every
     * derived statistic — covariance, correlation, whitening — divides
     * its own way without re-reading the corpus.
@@ -8246,8 +8228,7 @@ object LlmOps {
     *
     * Scale shape: reads the [[covMatrixDir]] maintained layout — the
     * corpus co-moment pass is paid ONCE for the whole q256/q259/q260
-    * family (round 16 re-ran the full aggregate here, doubling the
-    * family's corpus cost); the matrix is \|dims\|²-sized,
+    * family; the matrix is \|dims\|²-sized,
     * corpus-INDEPENDENT, so the iteration itself is driver-side
     * arithmetic over 2080 bounded rows (the q172 observe pattern)
     * emitted as a literal frame. The oracle replays the same
@@ -8371,8 +8352,8 @@ object LlmOps {
   // --- Real image decode gate (q263) ----------------------------------------
 
   /** q263: REAL IMAGE DECODE UNDER THE CROSS-ENGINE GATE — the last
-    * simulated multimodal component made real (round-18 verdict item 5;
-    * audio got this treatment via decodeWavBatch, the thumbnail leg via
+    * simulated multimodal component made real (audio got this
+    * treatment via decodeWavBatch, the thumbnail leg via
     * decodePngBatch — this puts the image CODEC's output under the
     * DuckDB hash gate). Per document, a genuine JDK-encoded BMP is
     * synthesized ([[graft.multimodal.Multimodal.synthBmp]] — dimensions

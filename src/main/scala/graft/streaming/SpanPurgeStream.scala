@@ -6,6 +6,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
+import graft.ops.Snapshots
+
 /** Streaming sub-document span purge — the q193 APPLY as a continual-
   * ingest `foreachBatch` sink (the [[IncrementalIndex]] shape applied
   * to the chunk-hash index): every micro-batch of documents is purged
@@ -83,17 +85,17 @@ object SpanPurgeStream {
       val winners = chunks.groupBy("h")
         .agg(count(lit(1)).as("nh"),
           min(struct(col("doc_id"), col("chunk_id"))).as("w"))
-      val dropLists = chunks
-        .join(winners, Seq("h"))
-        .join(seen.withColumn("__seen", lit(1)), Seq("h"), "left")
-        .filter(col("__seen").isNotNull ||
-          (col("nh") > 1 &&
-            struct(col("doc_id"), col("chunk_id")) =!= col("w")))
-        .groupBy("doc_id")
-        .agg(sort_array(collect_list(col("chunk_id"))).as("drops"))
-        .localCheckpoint(eager = true)
-      graft.queries.Corpus.applySpanDrops(batch, dropLists)
-        .write.mode("overwrite").parquet(s"$outDir/batch_id=$batchId")
+      Snapshots.using(chunks
+          .join(winners, Seq("h"))
+          .join(seen.withColumn("__seen", lit(1)), Seq("h"), "left")
+          .filter(col("__seen").isNotNull ||
+            (col("nh") > 1 &&
+              struct(col("doc_id"), col("chunk_id")) =!= col("w")))
+          .groupBy("doc_id")
+          .agg(sort_array(collect_list(col("chunk_id"))).as("drops"))) { dropLists =>
+        graft.queries.Corpus.applySpanDrops(batch, dropLists)
+          .write.mode("overwrite").parquet(s"$outDir/batch_id=$batchId")
+      }
       chunks.select("h").distinct()
         .join(seen, Seq("h"), "left_anti")
         .write.mode("overwrite").parquet(s"$indexDir/batch_id=$batchId")

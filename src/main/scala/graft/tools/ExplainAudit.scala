@@ -13,9 +13,6 @@ object ExplainAudit {
       .config("spark.sql.shuffle.partitions", "4")
       // events.parquet is TIMESTAMP(NANOS) — see Tables.events
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // pin the managed-table location (q59/q60 bucketed layouts) inside
-      // the repo regardless of the invoking working directory
-      .config("spark.sql.warehouse.dir", "/root/repo/spark-warehouse")
       .config("spark.ui.enabled", "false").getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     graft.SparkEntry.queries.filter(q => names(q._1)).toSeq.sortBy(_._1)

@@ -17,9 +17,6 @@ object TimeOne {
       .config("spark.sql.shuffle.partitions", "32")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // pin the managed-table location (q59/q60 bucketed layouts) inside
-      // the repo regardless of the invoking working directory
-      .config("spark.sql.warehouse.dir", "/root/repo/spark-warehouse")
       .config("spark.ui.enabled", "false")
       // the Bench session's production-shape switches — TimeOne exists
       // to attribute BENCH numbers, so it must time the same plans

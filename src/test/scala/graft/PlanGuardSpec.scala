@@ -1,12 +1,23 @@
 package graft
 
-/** Fleet-wide scale-killer guard: walks EVERY registered query's physical
-  * plan and fails if a nested-loop join (CartesianProduct /
-  * BroadcastNestedLoopJoin) appears outside the explicit allowlist of
-  * queries where the shape is intentional and bounded. A refactor that
-  * silently degrades an equi-join into a nested loop — the classic
-  * 100 TB catastrophe — now fails CI instead of surfacing in a bench
-  * regression three rounds later.
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.LogicalRDD
+import org.apache.spark.sql.execution.columnar.InMemoryRelation
+
+/** Fleet-wide guards over EVERY registered query, built once each:
+  *
+  *  - scale killer: fails if a nested-loop join (CartesianProduct /
+  *    BroadcastNestedLoopJoin) appears in a physical plan outside the
+  *    explicit allowlist of queries where the shape is intentional and
+  *    bounded. A refactor that silently degrades an equi-join into a
+  *    nested loop — the classic 100 TB catastrophe — fails CI instead of
+  *    surfacing as a bench regression.
+  *  - storage leak: fails if building a query leaves a persisted RDD
+  *    that its result does not read. A snapshot the result reads belongs
+  *    to the result (Spark frees it once the frame is dropped); any other
+  *    must be released by the function that made it
+  *    ([[graft.ops.Snapshots]]). An unreleased snapshot keeps its blocks
+  *    in storage memory for whatever runs next.
   */
 class PlanGuardSpec extends SparkSpec {
 
@@ -34,18 +45,30 @@ class PlanGuardSpec extends SparkSpec {
     "q212_xmodal_metrics" -> "broadcast of the query sample (doubly-bounded image-kind panel)",
     "q216_diversity_sample" -> "broadcast of the corpus-proportional centroid set (argmax assignment needs all K per vector)",
     "q219_curation_ab" -> "broadcast of the single-row train-token totals, one per variant (q85/q201 discipline)")
-  // q63 does not appear although it embeds a q28-shaped jaccard arm: its
-  // query function RUNS the iterative component loop, so the returned
-  // frame's plan reads the checkpointed labels — the edge-generation
-  // plans are exercised (and guarded) through q28/q44 themselves.
+  // The guard sees the returned plan only. A query whose function runs
+  // an eager loop (q63's component labels over a q28-shaped jaccard arm)
+  // returns a plan that reads the loop's snapshot, so the edge-generation
+  // plans are guarded through the queries that return them (q28/q44).
+
+  /** Ids of the persisted RDDs `df` reads: snapshot leaves and the
+    * buffers of cached fragments, subqueries included. */
+  private def readRdds(df: DataFrame): Set[Int] =
+    df.queryExecution.withCachedData.collectWithSubqueries {
+      case l: LogicalRDD => l.rdd.id
+      case m: InMemoryRelation => m.cacheBuilder.cachedColumnBuffers.id
+    }.toSet
+
+  /** Per query: (plans a nested loop, persisted RDD ids left unread). */
+  private lazy val sweep: Map[String, (Boolean, Set[Int])] =
+    SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>
+      val (df, left) = persistedBy(fn(spark, "/root/testdata/sf0.001"))
+      val plan = df.queryExecution.sparkPlan.toString
+      name -> ((plan.contains("CartesianProduct") ||
+        plan.contains("BroadcastNestedLoopJoin"), left -- readRdds(df)))
+    }.toMap
 
   test("no unintentional nested-loop join in any registered physical plan") {
-    val nestedByName = SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>
-      val plan = fn(spark, "/root/testdata/sf0.001")
-        .queryExecution.sparkPlan.toString
-      name -> (plan.contains("CartesianProduct") ||
-        plan.contains("BroadcastNestedLoopJoin"))
-    }.toMap
+    val nestedByName = sweep.map { case (name, (nested, _)) => name -> nested }
     val offenders = nestedByName.collect {
       case (name, true) if !intentional.contains(name) => name
     }
@@ -55,5 +78,12 @@ class PlanGuardSpec extends SparkSpec {
     // plan a (bounded, intentional) nested loop
     val stale = intentional.keys.filterNot(nestedByName.getOrElse(_, false))
     assert(stale.isEmpty, s"allowlist entries without a nested loop: $stale")
+  }
+
+  test("no registered query leaves a persisted RDD its result does not read") {
+    val leaks = sweep.collect {
+      case (name, (_, unread)) if unread.nonEmpty => s"$name -> rdd ${unread.mkString(",")}"
+    }
+    assert(leaks.isEmpty, s"unreleased snapshots: ${leaks.toSeq.sorted.mkString("; ")}")
   }
 }

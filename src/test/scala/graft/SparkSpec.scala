@@ -17,6 +17,15 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
     BigDecimal.valueOf(x * 1099511627776.0d)
       .setScale(0, BigDecimal.RoundingMode.HALF_UP).toLong
 
+  /** Run `body` and return its result with the ids of the RDDs it left
+    * persisted. Suites run one at a time in the forked test JVM, so the
+    * diff is `body`'s own. */
+  def persistedBy[A](body: => A): (A, Set[Int]) = {
+    val before = spark.sparkContext.getPersistentRDDs.keySet
+    val out = body
+    (out, spark.sparkContext.getPersistentRDDs.keySet.toSet -- before)
+  }
+
   override def afterAll(): Unit = {
     // session is shared across suites in one forked JVM; do not stop it.
     super.afterAll()

@@ -280,4 +280,12 @@ class IvfAdcSpec extends SparkSpec {
       assert(probe(dir) == reference)
     }
   }
+
+  test("the base build releases its training snapshot") {
+    val e = Tables.embeddings(spark, sf)
+    val tmp = java.nio.file.Files.createTempDirectory("graft_ivfadc_base_").toString
+    val (_, left) = persistedBy(LlmOps.ivfAdcBuildBase(spark,
+      e.filter(pmod(col("vec_id"), lit(5)) =!= 0), tmp))
+    assert(left.isEmpty, s"ivfAdcBuildBase left persisted RDDs $left")
+  }
 }

@@ -245,4 +245,12 @@ class SemDedupStreamSpec extends SparkSpec {
       .select($"cell_id", $"id_a").as[(Long, Long)].collect().toSeq
     assert(gen1After == gen1, "earlier generations' pairs must stand")
   }
+
+  test("an appended generation releases its batch snapshot") {
+    val r = root()
+    LlmOps.semIncrBuildBase(spark, base, r)
+    val (_, left) = persistedBy(LlmOps.semIncrAppendDelta(spark,
+      delta.select("vec_id", "embedding"), r, 1L))
+    assert(left.isEmpty, s"semIncrAppendDelta left persisted RDDs $left")
+  }
 }

@@ -96,4 +96,15 @@ class SpanPurgeStreamSpec extends SparkSpec {
         Seq((2L, "s1", "x y z")).toDF("doc_id", "source", "text"), 2L))
     assert(e.getMessage.contains("fresh checkpoint"))
   }
+
+  test("a handled batch leaves no persisted RDD behind") {
+    val (index, out) = dirs()
+    val docs = Seq(
+      (1L, "s1", (passage ++ toks(300, 32)).mkString(" ")),
+      (2L, "s1", (passage ++ toks(600, 32)).mkString(" ")))
+      .toDF("doc_id", "source", "text")
+    val (_, left) = persistedBy(SpanPurgeStream.handler(index, out)(docs, 0L))
+    assert(left.isEmpty, s"the span-purge handler left persisted RDDs $left")
+    assert(SpanPurgeStream.purged(spark, out).count() == 2L)
+  }
 }

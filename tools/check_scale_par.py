@@ -1,13 +1,14 @@
 #!/usr/bin/env python3
-"""Parallel variant of check_scale.py for the big scale factors: the
-sequential gate's wall clock is sum-of-oracle-times, which the 30x
-fixture turns into hours even though 95% of queries check in seconds.
-This runner keeps the SAME per-query subprocess isolation + timeout +
-explicit exclusions contract, but drives N worker lanes — and accepts
-per-query timeout OVERRIDES ("q173_cf_neighbors=10800") so the one
-legitimately-quadratic chain gets the wall clock it needs without
-raising the whole gate's hang ceiling. Longest-timeout queries are
-scheduled FIRST so the long pole overlaps the bulk.
+"""DuckDB oracle gate for the big scale factors: each query's check runs
+in its own subprocess under a timeout, and a query that times out is
+reported as excluded. A sequential gate's wall clock is the sum of the
+oracle times, which the 30x fixture turns into hours even though 95% of
+queries check in seconds, so this runner drives N worker lanes (1 lane
+is the sequential gate) and accepts per-query timeout OVERRIDES
+("q173_cf_neighbors=10800"), so the one legitimately-quadratic chain
+gets the wall clock it needs without raising the whole gate's hang
+ceiling. Longest-timeout queries are scheduled FIRST so the long pole
+overlaps the bulk.
 
 Usage:
   python3 tools/check_scale_par.py <sfdir> <outdir> <timeout> <out.json>
