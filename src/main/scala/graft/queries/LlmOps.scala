@@ -2490,35 +2490,67 @@ object LlmOps {
     * Scale shape: the corpus is scanned ONCE, collapsing immediately to
     * the word-type frequency table (vocabulary-sized — the 100 TB corpus
     * becomes millions of rows after the first aggregate), so the
-    * char-level explode — 1 row per character occurrence — runs over
-    * types, not tokens: a 10¹⁴-token corpus with a 10⁸-type vocabulary
-    * explodes 10⁹ rows, not 10¹⁵. Two shuffles (word, pair), both with
-    * map-side partial aggregation; exact integer weights; bounded
+    * pair explode — 1 row per symbol occurrence — runs over types, not
+    * tokens: a 10¹⁴-token corpus with a 10⁸-type vocabulary explodes
+    * 10⁹ rows, not 10¹⁵. Two shuffles (word, pair), both with map-side
+    * partial aggregation; exact integer weights; bounded
     * TakeOrderedAndProject over a total order (weight desc, pair asc).
-    * Character indexing is codepoint-based on both engines — identical
-    * on this corpus (ASCII; for arbitrary Unicode the symbol alphabet
-    * would be bytes, as in byte-level BPE).
+    * The pair count is [[bpePairWeights]], the same definition every
+    * q109 round ranks. Character indexing is codepoint-based on both
+    * engines — identical on this corpus (ASCII; for arbitrary Unicode
+    * the symbol alphabet would be bytes, as in byte-level BPE).
     */
   def q98BpeMergeStep(s: SparkSession, d: String): DataFrame =
     bpeMergeStep(documents(s, d))
 
   /** Core of q98 over any frame with a `text` column — see q98 scaladoc. */
-  private[queries] def bpeMergeStep(docs: DataFrame): DataFrame = {
-    val freq = docs
+  private[queries] def bpeMergeStep(docs: DataFrame): DataFrame =
+    bpePairWeights(bpeTypes(docs))
+      .select(concat(col("a"), lit(" "), col("b")).as("pair"),
+        col("n_contexts"), col("weight"))
+      .orderBy(col("weight").desc, col("pair"))
+      .limit(BpeTopK)
+
+  /** The BPE word-type table of a frame with a `text` column: one row
+    * per lower-cased, whitespace-split word type, `(w, f, seq)`, with `f`
+    * its corpus frequency and `seq` its symbols — one per code point,
+    * then the end-of-word marker `</w>` — joined by single spaces.
+    * [[toks]] splits on whitespace, so no symbol holds a space and
+    * `split(seq, ' ')` gives the symbols back. (`split` on the empty
+    * pattern cuts a string into its code points.) */
+  private[queries] def bpeTypes(docs: DataFrame): DataFrame =
+    docs
       .select(explode(toks(lower(col("text")))).as("w"))
       .filter(length(col("w")) >= 1)
       .groupBy("w").agg(count(lit(1)).as("f"))
-    freq
-      .select(col("f"), explode(expr(
-        """transform(sequence(1, length(w)),
-          |  i -> concat(substring(w, i, 1), ' ',
-          |              CASE WHEN i = length(w) THEN '</w>'
-          |                   ELSE substring(w, i + 1, 1) END))""".stripMargin))
-        .as("pair"))
-      .groupBy("pair")
-      .agg(count(lit(1)).as("n_contexts"), sum("f").as("weight"))
-      .orderBy(col("weight").desc, col("pair"))
-      .limit(BpeTopK)
+      .select(col("w"), col("f"),
+        concat_ws(" ", split(col("w"), ""), lit("</w>")).as("seq"))
+
+  /** Adjacent-symbol pair weights over a BPE type table `(f, seq)`: one
+    * row per distinct pair `(a, b, weight, n_contexts)`, `weight` = Σ f
+    * over the pair's occurrences, `n_contexts` their count. The one pair
+    * count q98 and every q109 round rank. */
+  private def bpePairWeights(types: DataFrame): DataFrame = {
+    val n = size(col("syms")) - 1
+    types
+      .select(col("f"), split(col("seq"), " ").as("syms"))
+      .select(col("f"), explode(arrays_zip(
+        slice(col("syms"), lit(1), n), slice(col("syms"), lit(2), n))).as("p"))
+      .groupBy(col("p")("0").as("a"), col("p")("1").as("b"))
+      .agg(sum("f").as("weight"), count(lit(1)).as("n_contexts"))
+  }
+
+  /** Apply the merge `(a, b)` to a `seq` column: every greedy leftmost
+    * non-overlapping occurrence of the symbol pair becomes the symbol
+    * `a || b`. The pattern is anchored on symbol boundaries (a space or
+    * an end of the string), and a regex scan matches left to right
+    * without overlap, which is exactly the classic algorithm's
+    * application order (in `a a a </w>`, `a·a` merges once). */
+  private[queries] def bpeMerge(seq: Column, a: String, b: String): Column = {
+    import java.util.regex.{Matcher, Pattern}
+    regexp_replace(seq,
+      s"(?<![^ ])${Pattern.quote(a)} ${Pattern.quote(b)}(?![^ ])",
+      Matcher.quoteReplacement(a + b))
   }
 
   val q98Oracle: String =
@@ -3416,93 +3448,57 @@ object LlmOps {
     * table. The output is the merge-rule table itself — the artifact a
     * BPE tokenizer ships.
     *
-    * The sequential-looking greedy application is fully relational:
-    * eligible positions (sym = a, next = b) can only be ADJACENT in the
-    * symbol sequence when a = b, so maximal runs of eligible positions
-    * (gaps-and-islands on the dense row index, the q88 machinery) merge
-    * at their odd within-run offsets — exactly leftmost
-    * non-overlapping. A row following a merged row is consumed
-    * (`lag(take)`); merged rows take symbol `a || b`.
+    * The sequential-looking greedy application is one string rewrite
+    * ([[bpeMerge]]): each type's symbols live in one space-joined `seq`,
+    * and a boundary-anchored regex scan over it matches left to right
+    * without overlap — exactly leftmost non-overlapping.
     *
-    * Scale shape: the corpus collapses to the word-type frequency table
-    * in the FIRST aggregate (q98's observation — types, not tokens), so
-    * every round shuffles only (type × symbol) rows — vocabulary-sized,
-    * shrinking monotonically as merges land. Each round is one
-    * w-partitioned window pass + one pair aggregate; state is
-    * lineage-cut per round (eager localCheckpoint, the
-    * ConnectedComponents discipline) and the 1-row best pair comes to
-    * the driver exactly like a production trainer holds its merge table
-    * (the oracle selects the same row via scalar CTEs — identical
-    * because the selection order is total). Rounds are a fixed constant,
-    * so the bounded driver loop is the plan, not a scaling hazard.
+    * Scale shape: the corpus collapses to the word-type table
+    * ([[bpeTypes]], q98's observation — types, not tokens) in the FIRST
+    * aggregate, snapshotted once (eager localCheckpoint); it stays
+    * distributed and vocabulary-sized. Each round then runs ONE pair
+    * aggregate over it ([[bpePairWeights]]; two jobs under AQE), and the
+    * 1-row best pair comes to the driver exactly like a production
+    * trainer holds its merge table (the oracle selects the same row via
+    * scalar CTEs — identical because the selection order is total). The
+    * merge itself is a lazy, narrow `regexp_replace` on `seq`: no
+    * window, no shuffle, no snapshot, so round r re-applies the r − 1
+    * earlier rewrites to the snapshot's rows. That is cheap while the
+    * rounds are the fixed [[BpeTrainRounds]]; the bounded driver loop is
+    * the plan, not a scaling hazard.
     */
   def q109BpeTrain(s: SparkSession, d: String): DataFrame =
     bpeTrain(docs = documents(s, d))
 
   /** Core of q109 over any frame with a `text` column — see q109 scaladoc. */
-  private[queries] def bpeTrain(docs: DataFrame): DataFrame = {
-    val (merges, state) = bpeTrainCore(docs)
-    Snapshots.release(state)
-    merges
-  }
+  private[queries] def bpeTrain(docs: DataFrame): DataFrame =
+    Snapshots.using(bpeTypes(docs))(types => bpeTrainCore(types)._1)
 
-  /** The trainer loop, returning BOTH artifacts: the merge-rule table
-    * (q109's output, a driver-side frame) and the final rewritten symbol
-    * table — which IS the encoded corpus at word-type granularity (q118
-    * aggregates it). One loop, two consumers; the state frames are
-    * lineage-cut per round and each superseded round is released. The
-    * returned state is a snapshot the caller owns: release it unless the
-    * caller's result reads it.
+  /** The trainer loop over a type table `(w, f, seq)`, returning BOTH
+    * artifacts: the merge-rule table (q109's output, a driver-side
+    * frame) and the final type table, its `seq` rewritten by every merge
+    * — which IS the encoded corpus at word-type granularity (q118
+    * aggregates it). The final table is a lazy plan over `types`, so the
+    * caller keeps `types` alive while it reads that table.
     */
-  private def bpeTrainCore(docs: DataFrame): (DataFrame, DataFrame) = {
-    import org.apache.spark.sql.expressions.Window
-    val s = docs.sparkSession
-    val wSeq = Window.partitionBy("w").orderBy("pos")
-    val wRn = Window.partitionBy("w").orderBy("rn")
-
-    var state = docs
-      .select(explode(toks(lower(col("text")))).as("w"))
-      .filter(length(col("w")) >= 1)
-      .groupBy("w").agg(count(lit(1)).as("f"))
-      .select(col("w"), col("f"),
-        explode(sequence(lit(1), length(col("w")) + 1)).as("pos"))
-      .withColumn("sym", expr(
-        "CASE WHEN pos <= length(w) THEN substring(w, pos, 1) ELSE '</w>' END"))
-      .localCheckpoint(eager = true)
-
+  private[queries] def bpeTrainCore(types: DataFrame): (DataFrame, DataFrame) = {
+    import types.sparkSession.implicits._
     val merges = Seq.newBuilder[(Long, String, String, Long, Long)]
+    var state = types
     var r = 1
     var exhausted = false
     while (r <= BpeTrainRounds && !exhausted) {
-      val p = state
-        .withColumn("nxt", lead(col("sym"), 1).over(wSeq))
-        .withColumn("rn", row_number().over(wSeq))
-      val best = p.filter(col("nxt").isNotNull)
-        .groupBy(col("sym").as("a"), col("nxt").as("b"))
-        .agg(sum("f").as("weight"), count(lit(1)).as("n_contexts"))
+      val best = bpePairWeights(state)
         .orderBy(col("weight").desc, col("a"), col("b"))
         .limit(1).collect()
       if (best.isEmpty) exhausted = true // degenerate corpus: nothing left to merge
       else {
         val (a, b) = (best(0).getString(0), best(0).getString(1))
         merges += ((r.toLong, a, b, best(0).getLong(2), best(0).getLong(3)))
-        val next = p
-          .withColumn("elig", col("sym") === lit(a) && col("nxt") === lit(b))
-          .withColumn("isl", when(col("elig"), col("rn") -
-            row_number().over(Window.partitionBy("w", "elig").orderBy("rn"))))
-          .withColumn("take", col("elig") &&
-            row_number().over(Window.partitionBy("w", "isl").orderBy("rn")) % 2 === 1)
-          .withColumn("prev_take", lag(col("take"), 1).over(wRn))
-          .filter(!coalesce(col("prev_take"), lit(false)))
-          .select(col("w"), col("f"), col("pos"),
-            when(col("take"), lit(a + b)).otherwise(col("sym")).as("sym"))
-          .localCheckpoint(eager = true)
-        Snapshots.release(state)
-        state = next
+        state = state.withColumn("seq", bpeMerge(col("seq"), a, b))
         r += 1
       }
     }
-    import s.implicits._
     (merges.result()
       .toDF("round", "merge_a", "merge_b", "weight", "n_contexts")
       .orderBy("round"),
@@ -3585,14 +3581,20 @@ object LlmOps {
     * characters is the visible proof the merges took effect.
     *
     * Scale shape: everything after the first aggregate is
-    * vocabulary-sized (the q98/q109 observation — types, not tokens);
-    * the final rollup collapses (type × symbol) rows to the symbol
-    * vocabulary with map-side partials, and top-k is a bounded
-    * TakeOrderedAndProject. Total order (corpus_freq DESC, sym).
+    * vocabulary-sized (the q98/q109 observation — types, not tokens).
+    * The q109 trainer runs on the type-table snapshot (one pair aggregate
+    * per round); its merges stay lazy `seq` rewrites, so the result's
+    * plan reads the snapshot through the rounds' narrow rewrites and
+    * owns it. The final rollup explodes each type's symbols and
+    * collapses (type × symbol) rows to the symbol vocabulary with
+    * map-side partials, and top-k is a bounded TakeOrderedAndProject.
+    * Total order (corpus_freq DESC, sym).
     */
   def q118BpeEncode(s: SparkSession, d: String): DataFrame = {
-    val (_, state) = bpeTrainCore(documents(s, d))
-    state.groupBy("sym")
+    val (_, state) = bpeTrainCore(
+      bpeTypes(documents(s, d)).localCheckpoint(eager = true))
+    state.select(col("w"), col("f"), explode(split(col("seq"), " ")).as("sym"))
+      .groupBy("sym")
       .agg(sum("f").as("corpus_freq"), countDistinct("w").as("n_types"))
       .orderBy(col("corpus_freq").desc, col("sym"))
       .limit(BpeEncodeTopK.toInt)
@@ -6272,7 +6274,7 @@ object LlmOps {
   // --- IVFADC: cell-pruned ADC over the composed layout (q245) ---------------
 
   /** IVFADC layout version tag. */
-  private val IvfAdcTag = "v1"
+  private val IvfAdcTag = "v2"
 
   /** q245: IVFADC — the COMPOSITION the q244 acceptance argument left
     * open: q244's ADC probe still scans the WHOLE code table per query
@@ -6288,9 +6290,11 @@ object LlmOps {
     *
     * The published layout has three artifacts: `cents/` (the coarse
     * centroid table, broadcast-sized forever), `codebook/` (the
-    * [[PqM]]·[[PqK]] = 128-row PQ codebook), and `codes/cell=C/` — the
-    * packed code table PARTITIONED BY COARSE CELL, so a probe's cell
-    * filter becomes DIRECTORY pruning: the scan reads
+    * [[PqM]]·[[PqK]] = 128-row PQ codebook), and
+    * `codes/batch_id=0/cell=C/` — the packed code table PARTITIONED BY
+    * COARSE CELL (one generation: [[ivfAdcBuildBase]] builds it over the
+    * whole table, the same builder q250 runs on its base), so a
+    * probe's cell filter becomes DIRECTORY pruning: the scan reads
     * nprobe/|cells| of the code bytes, and each candidate costs 8
     * small ints + one broadcast LUT lookup. Probe cost =
     * probed-cells × 8 ints — the q113 two-stage discipline applied to
@@ -6327,30 +6331,11 @@ object LlmOps {
   private def ivfAdcScores(s: SparkSession, d: String,
       panel: DataFrame): DataFrame = {
     import graft.sources.Layouts
-    val qxl = round(col("x").cast("double") * lit(KmQScale.toDouble)).cast("long")
     val tag = Layouts.srcTag(s, d, "embeddings")
     val dir = Layouts.ensureDir(s, s"ivfadc_${IvfAdcTag}_$tag") { tmp =>
-      val e = embeddings(s, d)
-      // coarse quantizer: per-cell integer centroid components (the
-      // q205 arithmetic — cell := label, trunc-division means)
-      e.select(col("label").as("cell"),
-          posexplode(col("embedding")).as(Seq("pos", "x")))
-        .select(col("cell"), col("pos"), qxl.as("qx"))
-        .groupBy("cell", "pos")
-        .agg(expr("sum(qx) DIV count(1)").as("cq"))
-        .write.parquet(s"$tmp/cents")
-      // fine quantizer: the q210-certified PQ builders
-      Snapshots.using(e.select(col("vec_id"), col("label").as("cell"),
-          pqQuant(col("embedding")).as("qe"))) { full =>
-        val sv = pqSubvectors(full)
-        pqCodebook(sv).write.parquet(s"$tmp/codebook")
-        pqCodes(sv, s.read.parquet(s"$tmp/codebook"))
-          .groupBy("vec_id")
-          .agg(transform(array_sort(collect_list(struct(col("m"), col("code")))),
-            p => p("code").cast("int")).as("codes"))
-          .join(full.select("vec_id", "cell"), Seq("vec_id"))
-          .write.partitionBy("cell").parquet(s"$tmp/codes")
-      }
+      // both quantizers trained on the whole table; the codes land as
+      // the single generation `codes/batch_id=0`
+      ivfAdcBuildBase(s, embeddings(s, d), tmp)
       // multi-subtree layout: stamp the root marker last
       val p = new org.apache.hadoop.fs.Path(tmp, "_SUCCESS")
       p.getFileSystem(s.sparkContext.hadoopConfiguration).create(p).close()
@@ -6497,6 +6482,7 @@ object LlmOps {
     * from the base slice (vec_id, label, embedding): coarse centroids
     * (per-cell integer means), the PQ codebook (trained on the base
     * only), and the `codes/batch_id=0` base generation. Shared by the
+    * build-once layout (q245/q249, whose base is the whole table), the
     * batch build (q250), the streaming ingest twin (q251), and the
     * drift-audit spec's planted layouts — one training path, so none
     * of them can drift from the gated arithmetic. */

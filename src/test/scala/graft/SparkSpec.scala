@@ -1,5 +1,7 @@
 package graft
 
+import org.apache.spark.graftbridge.ListenerDrain
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
@@ -24,6 +26,24 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
     val before = spark.sparkContext.getPersistentRDDs.keySet
     val out = body
     (out, spark.sparkContext.getPersistentRDDs.keySet.toSet -- before)
+  }
+
+  /** Run `body` and return its result with the number of Spark jobs it
+    * started. The listener bus is drained before the listener goes on
+    * and before it comes off, so the count is `body`'s own. */
+  def jobsRunBy[A](body: => A): (A, Int) = {
+    val sc = spark.sparkContext
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val counter = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+    }
+    ListenerDrain.drain(sc)
+    sc.addSparkListener(counter)
+    try {
+      val out = body
+      ListenerDrain.drain(sc)
+      (out, jobs.get)
+    } finally sc.removeSparkListener(counter)
   }
 
   override def afterAll(): Unit = {
