@@ -979,10 +979,11 @@ object Connectors {
     * three deterministic steps (thirds of the even-key customer
     * sequence), runs a real `readStream … Trigger.AvailableNow` pass
     * after each publish against ONE checkpoint (restart-resume is the
-    * point), lands each batch under `ingest/batch_id=N` (the q79
-    * replay protocol), and returns every ingested item with its batch
-    * attribution. The oracle recomputes the cursor slices from the raw
-    * customer table (row_number thirds, page = index div pageSize) —
+    * point), lands each batch under `ingest/batch_id=N`
+    * (`IdempotentSink.appendHandler`), and returns every ingested item
+    * with its batch attribution. The oracle recomputes the cursor
+    * slices from the raw customer table (row_number thirds, page =
+    * index div pageSize) —
     * the gate certifies offsets, slicing, restart-resume, and the JSON
     * round-trip cross-engine.
     *
@@ -1017,9 +1018,7 @@ object Connectors {
         .load()
         .writeStream
         .option("checkpointLocation", s"$root/ckpt")
-        .foreachBatch { (df: DataFrame, bid: Long) =>
-          df.write.mode("overwrite").parquet(s"$root/ingest/batch_id=$bid")
-        }
+        .foreachBatch(graft.streaming.IdempotentSink.appendHandler(s"$root/ingest") _)
         .trigger(Trigger.AvailableNow())
         .start()
       q.awaitTermination()

@@ -892,11 +892,7 @@ object Corpus {
     val dir = Layouts.ensureDir(s, s"bm25inc_${PostIdxTag}_$tag") { tmp =>
       appendPostingsBatch(s, documents(s, d).filter(incIsBase), tmp, 0L)
       appendPostingsBatch(s, documents(s, d).filter(!incIsBase), tmp, 1L)
-      // multi-subtree layout: the appends complete three write jobs each
-      // (nested markers only); stamp the ROOT marker the publish
-      // protocol requires, strictly after every sub-write succeeded
-      val p = new org.apache.hadoop.fs.Path(tmp, "_SUCCESS")
-      p.getFileSystem(s.sparkContext.hadoopConfiguration).create(p).close()
+      Layouts.markComplete(s, tmp)
     }
     probeBm25Index(s, dir, Bm25IncQueries)
   }
@@ -956,31 +952,29 @@ object Corpus {
     * the postings minus tombstoned rows (every shard is potentially
     * affected — a doc's terms hash anywhere — so this is honestly a
     * full postings rewrite, the heavy scheduled op, like Delta VACUUM
-    * after deletion vectors), publish by atomic directory swap, then
-    * drop the tombstones. The df/stats negative deltas STAY — they
+    * after deletion vectors), swap it in with `Layouts.replace` (the
+    * layout reads incomplete until the swap is done), then drop the
+    * tombstones. The df/stats negative deltas STAY — they
     * already describe the retained corpus and keep merging by +.
     * Probe results are invariant across the vacuum (spec-pinned);
     * only where the truth lives changes: anti-join before, absent
     * bytes after.
     */
   private[graft] def vacuumPostings(s: SparkSession, dir: String): Unit = {
-    val conf = s.sparkContext.hadoopConfiguration
     val tomb = new org.apache.hadoop.fs.Path(s"$dir/tombstones")
-    val fs = tomb.getFileSystem(conf)
+    val fs = tomb.getFileSystem(s.sparkContext.hadoopConfiguration)
     if (!fs.exists(tomb)) return
-    val post = new org.apache.hadoop.fs.Path(s"$dir/postings")
-    val fresh = new org.apache.hadoop.fs.Path(s"$dir/postings.vacuum")
-    s.read.parquet(post.toString)
-      .join(broadcast(s.read.parquet(tomb.toString).select("doc_id")),
-        Seq("doc_id"), "left_anti")
-      .write.partitionBy("batch_id", "bucket").mode("overwrite")
-      .parquet(fresh.toString)
-    val retired = new org.apache.hadoop.fs.Path(s"$dir/postings.retired")
-    fs.rename(post, retired)
-    fs.rename(fresh, post)
-    fs.delete(retired, true)
+    graft.sources.Layouts.replace(s, dir, "postings")(purgeTombstoned(s, dir))
     fs.delete(tomb, true)
   }
+
+  /** The write of a vacuum: the postings of `dir` minus tombstoned docs,
+    * under `to` — for [[graft.sources.Layouts.replace]] to swap in. */
+  private[graft] def purgeTombstoned(s: SparkSession, dir: String)(to: String): Unit =
+    s.read.parquet(s"$dir/postings")
+      .join(broadcast(s.read.parquet(s"$dir/tombstones").select("doc_id")),
+        Seq("doc_id"), "left_anti")
+      .write.partitionBy("batch_id", "bucket").mode("overwrite").parquet(to)
 
   /** q222: FORGET-RIGHT EXECUTION ON THE MAINTAINED INDEX — the
     * operation q187's forget PLAN promises: a takedown/GDPR request
@@ -1009,9 +1003,7 @@ object Corpus {
       appendPostingsBatch(s, documents(s, d).filter(incIsBase), tmp, 0L)
       appendPostingsBatch(s, documents(s, d).filter(!incIsBase), tmp, 1L)
       deletePostingsBatch(s, documents(s, d).filter(delVictims), tmp, 2L)
-      // multi-subtree layout: stamp the root marker after all sub-writes
-      val p = new org.apache.hadoop.fs.Path(tmp, "_SUCCESS")
-      p.getFileSystem(s.sparkContext.hadoopConfiguration).create(p).close()
+      Layouts.markComplete(s, tmp)
     }
     probeBm25Index(s, dir, Bm25DelQueries)
   }

@@ -5834,37 +5834,19 @@ object LlmOps {
     * re-assignment arithmetic, the centroid table untouched, and a
     * probe before and after is bit-identical (spec-pinned). Cost is
     * one read+write of the lists bytes, amortized across every
-    * subsequent probe's file-listing and footer overhead.
-    * Single-maintainer assumption, like every maintained layout here.
+    * subsequent probe's file-listing and footer overhead. The merged
+    * tree is swapped in by `Layouts.replace` (complete-or-absent).
     */
-  private[graft] def ivfCompactGenerations(s: SparkSession, dir: String): Unit = {
-    val tmp = s"$dir/lists.compacting"
-    s.read.parquet(s"$dir/lists")
-      .select("vec_id", "embedding", "cell")
-      .write.partitionBy("cell").mode("overwrite").parquet(tmp)
-    // SWAP, complete-or-absent: the layout root's _SUCCESS comes DOWN
-    // before the first destructive step and goes back up only after the
-    // merge is fully published — a crash anywhere inside the window
-    // leaves the root unmarked, so Layouts.ensureDir treats the layout
-    // as incomplete and REBUILDS instead of probes silently reading an
-    // empty (or half-swapped) lists/ tree. The old generations are also
-    // renamed ASIDE rather than deleted first, so even a reader racing
-    // the swap outside ensureDir fails loudly on a missing path, never
-    // quietly on empty results. Single-maintainer, like every
-    // maintained layout here.
-    val fs = new org.apache.hadoop.fs.Path(dir)
-      .getFileSystem(s.sparkContext.hadoopConfiguration)
-    def p(x: String) = new org.apache.hadoop.fs.Path(x)
-    val lists = p(s"$dir/lists")
-    val retired = p(s"$dir/lists.retired")
-    fs.delete(p(s"$dir/_SUCCESS"), false)
-    fs.delete(retired, true) // debris of a prior crashed swap
-    fs.rename(lists, retired)
-    fs.mkdirs(lists)
-    fs.rename(p(tmp), p(s"$dir/lists/batch_id=0"))
-    fs.delete(retired, true)
-    fs.create(p(s"$dir/_SUCCESS")).close()
-  }
+  private[graft] def ivfCompactGenerations(s: SparkSession, dir: String): Unit =
+    graft.sources.Layouts.replace(s, dir, "lists")(mergeGenerations(s, dir, "lists"))
+
+  /** The write of a generation compaction: every generation of the
+    * cell-partitioned `dir/sub` merged into the one generation
+    * `to/batch_id=0`, for [[graft.sources.Layouts.replace]] to swap in. */
+  private[graft] def mergeGenerations(s: SparkSession, dir: String, sub: String)
+      (to: String): Unit =
+    s.read.parquet(s"$dir/$sub").drop("batch_id")
+      .write.partitionBy("cell").mode("overwrite").parquet(s"$to/batch_id=0")
 
   /** q238: INCREMENTAL IVF INDEX MAINTENANCE — q205's maintained ANN
     * layout gains the batch_id protocol already
@@ -5895,10 +5877,7 @@ object LlmOps {
       ivfBuildBase(s, e.filter(pmod(col("vec_id"), lit(IvfIncMod)) =!= 0), tmp)
       ivfAppendDelta(s, e.filter(pmod(col("vec_id"), lit(IvfIncMod)) === 0),
         tmp, 1L)
-      // multi-subtree layout: stamp the root marker the publish
-      // protocol requires, strictly after every sub-write succeeded
-      val p = new org.apache.hadoop.fs.Path(tmp, "_SUCCESS")
-      p.getFileSystem(s.sparkContext.hadoopConfiguration).create(p).close()
+      Layouts.markComplete(s, tmp)
     }
     ivfProbe(s, d, dir)
   }
@@ -6231,8 +6210,7 @@ object LlmOps {
             p => p("code").cast("int")).as("codes"))
           .write.parquet(s"$tmp/codes")
       }
-      val p = new org.apache.hadoop.fs.Path(tmp, "_SUCCESS")
-      p.getFileSystem(s.sparkContext.hadoopConfiguration).create(p).close()
+      Layouts.markComplete(s, tmp)
     }
     val isQuery = pmod(col("vec_id"), lit(RecallQueryMod)) === 0 &&
       col("vec_id") < lit(RecallQueryMod * RecallMaxQueries)
@@ -6336,9 +6314,7 @@ object LlmOps {
       // both quantizers trained on the whole table; the codes land as
       // the single generation `codes/batch_id=0`
       ivfAdcBuildBase(s, embeddings(s, d), tmp)
-      // multi-subtree layout: stamp the root marker last
-      val p = new org.apache.hadoop.fs.Path(tmp, "_SUCCESS")
-      p.getFileSystem(s.sparkContext.hadoopConfiguration).create(p).close()
+      Layouts.markComplete(s, tmp)
     }
     ivfAdcProbe(s, dir, panel)
   }
@@ -6424,36 +6400,13 @@ object LlmOps {
   }
 
   /** Compact the incremental IVFADC layout's accumulated code
-    * generations back to ONE (`batch_id=0`) — the q238/`
-    * ivfCompactGenerations` hygiene on the composed layout: codes and
-    * cell assignments are FINAL once written (both quantizers frozen),
-    * so compaction is a pure file-layout merge per cell — quantizer
-    * tables untouched, probe bit-invariant (spec-pinned). The swap is
-    * complete-or-absent: the layout root's `_SUCCESS` comes down
-    * before the first destructive step and returns only after the
-    * merge published, and the old generations rename ASIDE rather than
-    * delete-first — a crash inside the window reads as an incomplete
-    * layout (ensureDir rebuilds), never as silently-empty probes.
-    * Single-maintainer, like every maintained layout here. */
-  private[graft] def ivfAdcCompactGenerations(s: SparkSession,
-      dir: String): Unit = {
-    val tmp = s"$dir/codes.compacting"
-    s.read.parquet(s"$dir/codes")
-      .select("vec_id", "codes", "cell")
-      .write.partitionBy("cell").mode("overwrite").parquet(tmp)
-    val fs = new org.apache.hadoop.fs.Path(dir)
-      .getFileSystem(s.sparkContext.hadoopConfiguration)
-    def p(x: String) = new org.apache.hadoop.fs.Path(x)
-    val codes = p(s"$dir/codes")
-    val retired = p(s"$dir/codes.retired")
-    fs.delete(p(s"$dir/_SUCCESS"), false)
-    fs.delete(retired, true) // debris of a prior crashed swap
-    fs.rename(codes, retired)
-    fs.mkdirs(codes)
-    fs.rename(p(tmp), p(s"$dir/codes/batch_id=0"))
-    fs.delete(retired, true)
-    fs.create(p(s"$dir/_SUCCESS")).close()
-  }
+    * generations back to ONE (`batch_id=0`) — [[ivfCompactGenerations]]
+    * on the composed layout: codes and cell assignments are FINAL once
+    * written (both quantizers frozen), so compaction is a pure
+    * file-layout merge per cell — quantizer tables untouched, probe
+    * bit-invariant (spec-pinned), swapped in by `Layouts.replace`. */
+  private[graft] def ivfAdcCompactGenerations(s: SparkSession, dir: String): Unit =
+    graft.sources.Layouts.replace(s, dir, "codes")(mergeGenerations(s, dir, "codes"))
 
   /** q250: INCREMENTAL IVFADC MAINTENANCE — the batch_id protocol
     * (q79 MinHash, q211 BM25, q238 IVF) applied to the COMPOSED q245
@@ -6537,8 +6490,7 @@ object LlmOps {
       // one delta snapshot lands incrementally
       ivfAdcAppendDelta(s,
         e.filter(pmod(col("vec_id"), lit(IvfIncMod)) === 0), tmp, 1L)
-      val p = new org.apache.hadoop.fs.Path(tmp, "_SUCCESS")
-      p.getFileSystem(s.sparkContext.hadoopConfiguration).create(p).close()
+      Layouts.markComplete(s, tmp)
     }
   }
 
@@ -6778,8 +6730,7 @@ object LlmOps {
           delta.filter(
             pmod(expr(s"vec_id DIV $IvfIncMod"), lit(2)) === b), b)
       }
-      val p = new org.apache.hadoop.fs.Path(tmp, "_SUCCESS")
-      p.getFileSystem(s.sparkContext.hadoopConfiguration).create(p).close()
+      Layouts.markComplete(s, tmp)
     }
     ivfAdcRank(ivfAdcProbe(s, dir, ivfAdcQueryPanel(s, d)))
   }
@@ -7013,9 +6964,7 @@ object LlmOps {
         graft.streaming.CurationFunnelStream.ingest(tmp)(
           docs.filter(pmod(col("doc_id"), lit(3)) === b), b)
       }
-      // multi-subtree layout: stamp the root marker last
-      val p = new org.apache.hadoop.fs.Path(tmp, "_SUCCESS")
-      p.getFileSystem(s.sparkContext.hadoopConfiguration).create(p).close()
+      Layouts.markComplete(s, tmp)
     }
   }
 
@@ -7829,8 +7778,7 @@ object LlmOps {
           delta.filter(pmod(expr(s"vec_id DIV $IncrSemNewMod"), lit(2)) === b),
           b)
       }
-      val p = new org.apache.hadoop.fs.Path(tmp, "_SUCCESS")
-      p.getFileSystem(s.sparkContext.hadoopConfiguration).create(p).close()
+      Layouts.markComplete(s, tmp)
     }
   }
 

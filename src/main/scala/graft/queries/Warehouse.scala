@@ -4790,10 +4790,7 @@ object Warehouse {
         .agg(sum("mv_sum_qty").as("mv_sum_qty"),
           sum("mv_cnt").as("mv_cnt"))
       mv.write.parquet(s"$tmp/mv")
-      // the kv subtree carries no parquet _SUCCESS: stamp the layout
-      // root last (the ivfadc multi-subtree protocol)
-      val p = new org.apache.hadoop.fs.Path(tmp0, "_SUCCESS")
-      p.getFileSystem(s.sparkContext.hadoopConfiguration).create(p).close()
+      Layouts.markComplete(s, tmp0)
     }
     val kvPath = s"${localPath(dir)}/t"
     val mvPath = s"${localPath(dir)}/mv"
@@ -4941,8 +4938,7 @@ object Warehouse {
         .agg(sum("mv_sum_qty").as("mv_sum_qty"), sum("mv_cnt").as("mv_cnt"))
         .filter(col("mv_cnt") > 0)
       mv.write.parquet(s"$tmp/mv")
-      val p = new org.apache.hadoop.fs.Path(tmp0, "_SUCCESS")
-      p.getFileSystem(s.sparkContext.hadoopConfiguration).create(p).close()
+      Layouts.markComplete(s, tmp0)
     }
     val kvPath = s"${localPath(dir)}/t"
     val mvPath = s"${localPath(dir)}/mv"

@@ -27,6 +27,15 @@ import org.apache.spark.sql.functions.col
   * photo-finish rename losing to a concurrent winner (Hadoop local-FS
   * rename nests src inside an existing dst) is detected and the loser's
   * copy discarded.
+  *
+  * The root `_SUCCESS` marker belongs to this object. A layout build
+  * that writes several subtrees stamps it with [[markComplete]] after
+  * the last one. A maintained layout that rewrites one subtree in place
+  * (IVF and IVFADC generation compaction, the BM25 postings vacuum) goes
+  * through [[replace]], which keeps the marker down for the whole swap:
+  * a crash or a failed rename anywhere inside it leaves a layout that
+  * [[ensureDir]] rebuilds, never one that reads as complete with an
+  * empty or half-swapped subtree.
   */
 object Layouts {
 
@@ -89,7 +98,7 @@ object Layouts {
       val marks = s.sparkContext.hadoopConfiguration
         .getBoolean("mapreduce.fileoutputcommitter.marksuccessfuljobs", true)
       if (!marks && fs.exists(tmp) && !complete(tmp))
-        fs.create(new Path(tmp, "_SUCCESS")).close()
+        markComplete(s, tmp.toString)
       if (!fs.exists(loc) && fs.rename(tmp, loc)) {
         val nested = new Path(loc, tmp.getName)
         if (fs.exists(nested)) fs.delete(nested, true)
@@ -108,6 +117,55 @@ object Layouts {
         "owns this path; remove the stale dir and retry")
     loc
   }
+
+  /** Stamp `dir` complete: its root `_SUCCESS` marker. */
+  def markComplete(s: SparkSession, dir: String): Unit = {
+    val p = new Path(dir, "_SUCCESS")
+    p.getFileSystem(s.sparkContext.hadoopConfiguration).create(p).close()
+  }
+
+  /** Replace subtree `dir/sub` with what `write` puts at the path it is
+    * given, complete-or-absent — the steps of [[replace]], in order:
+    *
+    *  1. write `dir/sub.compacting` (non-destructive; stale debris of
+    *     that name is cleared first);
+    *  2. take the root marker down;
+    *  3. clear stale `sub.retired` debris of an earlier crashed swap;
+    *  4. rename `sub` to `sub.retired` (aside, not deleted: a reader
+    *     racing the swap fails on a missing path, never on empty data);
+    *  5. rename the new tree into place as `sub`;
+    *  6. delete `sub.retired`;
+    *  7. restamp the marker.
+    *
+    * A rename that fails, or whose target already exists (Hadoop would
+    * nest the source inside it), throws with the marker still down.
+    */
+  private[graft] def replaceSteps(s: SparkSession, dir: String, sub: String)
+      (write: String => Unit): Seq[() => Unit] = {
+    val fs = new Path(dir).getFileSystem(s.sparkContext.hadoopConfiguration)
+    val live = new Path(dir, sub)
+    val fresh = new Path(dir, s"$sub.compacting")
+    val retired = new Path(dir, s"$sub.retired")
+    def move(from: Path, to: Path): Unit =
+      if (fs.exists(to) || !fs.rename(from, to))
+        throw new java.io.IOException(s"rename $from -> $to failed; $dir " +
+          "stays unmarked (incomplete) until it is rebuilt")
+    Seq(
+      () => { fs.delete(fresh, true); write(fresh.toString) },
+      () => fs.delete(new Path(dir, "_SUCCESS"), false),
+      () => fs.delete(retired, true),
+      () => move(live, retired),
+      () => move(fresh, live),
+      () => fs.delete(retired, true),
+      () => markComplete(s, dir))
+  }
+
+  /** Swap subtree `dir/sub` for a freshly written one under the root
+    * marker ([[replaceSteps]]). Single-maintainer, like every maintained
+    * layout here. */
+  def replace(s: SparkSession, dir: String, sub: String)
+      (write: String => Unit): Unit =
+    replaceSteps(s, dir, sub)(write).foreach(_())
 
   /** Ensure `<warehouse>/graft_layouts/<name>` holds the directory
     * `build(tmpPath)` produces; returns the published path.

@@ -15,9 +15,8 @@ import graft.functions.{MinHash, VectorExpressions}
   * ledger against q237's own DuckDB oracle, so slicing-independence is
   * certified cross-engine at every scale factor).
   *
-  * Maintained state under `root`, all batch_id-partitioned with
-  * overwrite-mode own-partition writes (the q79/q211 replay protocol —
-  * a redelivered batch rewrites its own files, never duplicates):
+  * Maintained state under `root`, all on the [[IdempotentSink]]
+  * `batch_id=N` log (the handler guards before its first write):
   *
   *  - `facts/batch_id=N` — per-doc PURE facts: (doc_id, source, lang,
   *    h, ntok, logit). Hash, token count, and the quality logit are
@@ -46,10 +45,8 @@ import graft.functions.{MinHash, VectorExpressions}
   * deployment wants: cheap continual admission, scheduled ledger
   * materialization.
   *
-  * Re-ingested doc_ids (re-crawls) follow the index's keep-latest
-  * discipline: facts and grams resolve to the row with the largest
-  * batch_id per doc, matching [[IncrementalIndex]]'s probe-side
-  * keep-latest.
+  * Re-ingested doc_ids (re-crawls) resolve to their newest batch
+  * ([[IdempotentSink.keepLatest]], as in [[IncrementalIndex]]'s probe).
   */
 object CurationFunnelStream {
 
@@ -63,21 +60,14 @@ object CurationFunnelStream {
 
   private def toks(c: org.apache.spark.sql.Column) = split(trim(c), "\\s+")
 
-  private def readOrEmpty(s: SparkSession, dir: String,
-      schema: StructType): DataFrame = {
-    val p = new org.apache.hadoop.fs.Path(dir)
-    val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-    if (fs.exists(p) && fs.listStatus(p).nonEmpty)
-      s.read.schema(schema.add(StructField("batch_id", LongType))).parquet(dir)
-    else s.createDataFrame(s.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-      schema.add(StructField("batch_id", LongType)))
-  }
-
   /** The foreachBatch handler: land one micro-batch of documents
     * (doc_id, source, lang, text) into the maintained curation state at
     * `root`. Curry the root and pass to `writeStream.foreachBatch`. */
   def ingest(root: String)(batch: DataFrame, batchId: Long): Unit = {
     val s = batch.sparkSession
+    IdempotentSink.guard(s,
+      Seq("facts", "bands", "sigs", "pairs", "grams").map(d => s"$root/$d"),
+      batchId, batchId)
     // per-doc pure facts — computed once, text never persisted
     val facts = batch.select(col("doc_id"), col("source"), col("lang"),
         VectorExpressions.hornerHash(col("text")).as("h"),
@@ -89,8 +79,8 @@ object CurationFunnelStream {
         col("ntok"), coalesce(col("logit"), lit(0L)).as("logit"))
     facts.write.mode("overwrite").parquet(s"$root/facts/batch_id=$batchId")
     // LSH leg: the q79-certified probe-and-append protocol, en docs,
-    // the q237 dedupEdges parameters (also enforces the checkpoint/
-    // index aging guard and emits the eager pairs/batch_id=N signal)
+    // the q237 dedupEdges parameters (emits the eager pairs/batch_id=N
+    // signal)
     IncrementalIndex.probeAndIndex(s"$root/bands", s"$root/sigs",
         s"$root/pairs", shingleN = 2, k = 64, nBands = 8,
         maxBucket = 100, minJaccard = 0.5)(
@@ -108,18 +98,7 @@ object CurationFunnelStream {
     * byte-identical to q237's ledger on the union (certified by the
     * q246 gate running against q237's own oracle). */
   def ledger(s: SparkSession, root: String): DataFrame = {
-    // keep-latest via ONE windowed max per state dir (round-20, guide
-    // §2.4): the former groupBy-max + self-join evaluated each state
-    // read twice and paid a join exchange; a per-id max over an
-    // unordered window keeps every row of the winning batch (bands have
-    // several rows per id — max_by would collapse them) in one scan and
-    // one exchange.
-    def keepLatest(df: DataFrame, idCol: String): DataFrame = {
-      val w = org.apache.spark.sql.expressions.Window.partitionBy(idCol)
-      df.withColumn("__mb", max("batch_id").over(w))
-        .filter(col("batch_id") === col("__mb"))
-        .drop("__mb", "batch_id")
-    }
+    import IdempotentSink.{keepLatest, readOrEmpty}
     val facts = keepLatest(readOrEmpty(s, s"$root/facts", FactsSchema), "doc_id")
     // slicing-independent near-dup edges: batch semantics over the
     // ACCUMULATED postings (final-occupancy bucket guard), plus the

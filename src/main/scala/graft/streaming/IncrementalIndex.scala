@@ -15,16 +15,10 @@ import graft.functions.MinHash
   * each batch's cost scales with the batch, and the corpus is never
   * re-banded.
   *
-  * Exactly-once discipline (the StreamingSpec foreachBatch pattern): both
-  * the index appends and the emitted pairs land in `batch_id=N`
-  * subdirectories with overwrite mode, so a post-crash replay of a batch
-  * rewrites its own files instead of duplicating rows; and the probe
-  * reads the index RESTRICTED to `batch_id < N`, so a replayed batch —
-  * whose own previous append is already on disk — never pairs against
-  * its own rows. On a real deployment the two writes would be one
-  * transactional-table commit (or a q67-style idempotent MERGE); the
-  * partition-dir protocol here gives the same replay-safety with plain
-  * parquet.
+  * Replay: the [[IdempotentSink]] `batch_id=N` log — the index appends
+  * and the emitted pairs each land in a `batch_id=N` directory, and the
+  * probe reads the index at `batch_id < N`, so a replayed batch never
+  * pairs against its own rows.
   */
 object IncrementalIndex {
 
@@ -34,32 +28,6 @@ object IncrementalIndex {
   private val SigsSchema = StructType(Seq(
     StructField("id", LongType),
     StructField("sig", ArrayType(LongType))))
-
-  /** Read a batch_id-partitioned index dir that may not exist yet (first
-    * batch); absent → empty frame with the right schema + batch_id.
-    */
-  private def readOrEmpty(s: org.apache.spark.sql.SparkSession, dir: String,
-                          schema: StructType): DataFrame = {
-    val p = new org.apache.hadoop.fs.Path(dir)
-    val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-    if (fs.exists(p) && fs.listStatus(p).nonEmpty) s.read.schema(
-        schema.add(StructField("batch_id", LongType))).parquet(dir)
-    else s.createDataFrame(s.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-      schema.add(StructField("batch_id", LongType)))
-  }
-
-  /** Largest batch_id partition already present under `dir` (-1 if none)
-    * — from the directory listing, no Spark job.
-    */
-  private def maxBatchId(s: org.apache.spark.sql.SparkSession, dir: String): Long = {
-    val p = new org.apache.hadoop.fs.Path(dir)
-    val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) -1L
-    else fs.listStatus(p).iterator.map(_.getPath.getName)
-      .filter(_.startsWith("batch_id="))
-      .map(_.stripPrefix("batch_id=").toLong)
-      .foldLeft(-1L)(math.max)
-  }
 
   /** The foreachBatch handler: probe batch (doc_id, tokens) against the
     * index at `bandsDir`/`sigsDir`, write this batch's pairs to
@@ -82,18 +50,7 @@ object IncrementalIndex {
       maxBucket: Int = 100, minJaccard: Double = 0.5)
       (batch: DataFrame, batchId: Long): Unit = {
     val s = batch.sparkSession
-    // The index dirs and the stream's checkpoint MUST age together: the
-    // probe's replay safety keys partitions by batch_id, so a stream
-    // restarted on a FRESH checkpoint against an existing index would
-    // overwrite old partitions and probe a mix of two ingest histories.
-    // A committed partition beyond the current batch is exactly that
-    // signature (a crash-replay never resumes before its own append) —
-    // refuse loudly instead of corrupting the index.
-    val committed = math.max(maxBatchId(s, bandsDir), maxBatchId(s, sigsDir))
-    require(committed <= batchId,
-      s"index at $bandsDir already holds batch_id=$committed but the stream is at " +
-        s"batch $batchId — a fresh checkpoint is being replayed against an older " +
-        "index; point the stream at empty index dirs (or restore the checkpoint)")
+    IdempotentSink.guard(s, Seq(bandsDir, sigsDir), batchId, batchId)
     val docs = batch.select(col("doc_id"), col("tokens"))
     // Persist the KERNEL OUTPUT, not the raw tokens: bands and sigs feed
     // three actions (pairs write + two index appends), and the
@@ -108,23 +65,14 @@ object IncrementalIndex {
       .filter(col("sig").isNotNull)
       .persist(lvl)
     try {
-      // replay safety: a redelivered batch's own prior append is on disk
-      // under batch_id=N — excluding batch_id >= N keeps the probe
-      // byte-identical to the first delivery. Then keep-latest per id
-      // (historical re-ingests) and drop ids the current batch
-      // supersedes (a small broadcast side).
-      val batchIds = newSigs.select(col("id"))
-      val rawBands = readOrEmpty(s, bandsDir, BandsSchema)
-        .filter(col("batch_id") < batchId)
-      val latest = rawBands.groupBy("id").agg(max("batch_id").as("batch_id"))
-      val idxBands = rawBands.join(latest, Seq("id", "batch_id")).drop("batch_id")
-        .join(broadcast(batchIds), Seq("id"), "left_anti")
-      val rawSigs = readOrEmpty(s, sigsDir, SigsSchema)
-        .filter(col("batch_id") < batchId)
-      val idxSigs = rawSigs
-        .join(rawSigs.groupBy("id").agg(max("batch_id").as("batch_id")),
-          Seq("id", "batch_id")).drop("batch_id")
-        .join(broadcast(batchIds), Seq("id"), "left_anti")
+      // history strictly before this batch, keep-latest per id, minus
+      // the ids this batch supersedes (a small broadcast side)
+      def index(dir: String, schema: StructType) =
+        IdempotentSink.keepLatest(IdempotentSink.readOrEmpty(s, dir, schema)
+            .filter(col("batch_id") < batchId), "id")
+          .join(broadcast(newSigs.select(col("id"))), Seq("id"), "left_anti")
+      val idxBands = index(bandsDir, BandsSchema)
+      val idxSigs = index(sigsDir, SigsSchema)
       MinHash.incrementalProbe(idxBands, idxSigs, newBands, newSigs,
           maxBucket, minJaccard)
         .write.mode("overwrite").parquet(s"$pairsDir/batch_id=$batchId")

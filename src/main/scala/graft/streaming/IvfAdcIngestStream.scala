@@ -21,29 +21,11 @@ import org.apache.spark.sql.DataFrame
   * stream == batch cross-engine at every scale factor (the q246/q237
   * pattern on vectors).
   *
-  * Replay discipline (the q79/q211 protocol verbatim): stream batch N
-  * owns generation `batch_id = N+1` (generation 0 is the base build)
-  * and writes it in overwrite mode, so a crashed-and-redelivered batch
-  * rewrites its own files byte-identically instead of duplicating
-  * vectors. A stream restarted on a FRESH checkpoint against an
-  * already-advanced layout would overwrite old generations with new
-  * vectors — the [[IncrementalIndex]] aging guard applies and the
-  * handler refuses loudly.
+  * Replay: the [[IdempotentSink]] `batch_id=N` log with a generation
+  * offset — stream batch N owns generation N+1 of `codes/`
+  * (generation 0 is the base build).
   */
 object IvfAdcIngestStream {
-
-  /** Largest committed generation under `codesDir` (-1 if none) — from
-    * the directory listing, no Spark job. */
-  private def maxGeneration(s: org.apache.spark.sql.SparkSession,
-      codesDir: String): Long = {
-    val p = new org.apache.hadoop.fs.Path(codesDir)
-    val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) -1L
-    else fs.listStatus(p).iterator.map(_.getPath.getName)
-      .filter(_.startsWith("batch_id="))
-      .map(_.stripPrefix("batch_id=").toLong)
-      .foldLeft(-1L)(math.max)
-  }
 
   /** The foreachBatch handler: land one micro-batch of vectors
     * (vec_id, embedding) as generation `batchId + 1` of the IVFADC
@@ -60,16 +42,7 @@ object IvfAdcIngestStream {
         s"no frozen $t/ table at $root — build the base layout " +
           "(LlmOps.ivfAdcBuildBase) before streaming deltas into it")
     }
-    // checkpoint/layout aging guard: generation N+1 beyond this batch's
-    // own means a fresh checkpoint is replaying against an older layout
-    // — overwriting would splice two ingest histories; refuse loudly.
-    // (A crash-replay of batch N sees at most its OWN generation N+1.)
-    val committed = maxGeneration(s, s"$root/codes")
-    require(committed <= batchId + 1,
-      s"layout at $root already holds generation batch_id=$committed but the " +
-        s"stream is at batch $batchId — a fresh checkpoint is being replayed " +
-        "against an older layout; point the stream at a fresh layout (or " +
-        "restore the checkpoint)")
+    IdempotentSink.guard(s, Seq(s"$root/codes"), batchId, batchId + 1)
     graft.queries.LlmOps.ivfAdcAppendDelta(s,
       batch.select("vec_id", "embedding"), root, batchId + 1)
   }

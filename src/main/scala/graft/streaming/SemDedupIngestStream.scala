@@ -21,29 +21,14 @@ import org.apache.spark.sql.DataFrame
   * pairs against q255's own DuckDB oracle, certifying stream == batch
   * cross-engine at every scale factor.
   *
-  * Replay discipline (the q79/q211/q251 protocol verbatim): stream
-  * batch N owns generation `batch_id = N+1` (generation 0 is the base
-  * assignment) and writes members AND pairs in overwrite mode; the
-  * prior-generation read is partition-pruned to `batch_id < N+1`, so a
-  * crashed-and-redelivered batch recomputes byte-identically instead
-  * of duplicating pairs. A stream restarted on a FRESH checkpoint
-  * against an already-advanced layout would splice two ingest
-  * histories — the aging guard refuses loudly.
+  * Replay: the [[IdempotentSink]] `batch_id=N` log with a generation
+  * offset — stream batch N owns generation N+1 (generation 0 is the
+  * base assignment) of both `members/` and `pairs/`, and reads prior
+  * generations at `batch_id < N+1`. Besides the shared guard, a batch
+  * refuses a GAP (top generation below N): only the previous or its
+  * own generation is a legal continuation.
   */
 object SemDedupIngestStream {
-
-  /** Largest committed generation under `membersDir` (-1 if none) —
-    * from the directory listing, no Spark job. */
-  private def maxGeneration(s: org.apache.spark.sql.SparkSession,
-      membersDir: String): Long = {
-    val p = new org.apache.hadoop.fs.Path(membersDir)
-    val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) -1L
-    else fs.listStatus(p).iterator.map(_.getPath.getName)
-      .filter(_.startsWith("batch_id="))
-      .map(_.stripPrefix("batch_id=").toLong)
-      .foldLeft(-1L)(math.max)
-  }
 
   /** The foreachBatch handler: land one micro-batch of vectors
     * (vec_id, embedding) as generation `batchId + 1` of the layout at
@@ -58,19 +43,10 @@ object SemDedupIngestStream {
     require(fs.exists(new org.apache.hadoop.fs.Path(s"$root/cents")),
       s"no frozen cents/ seed table at $root — build the base layout " +
         "(LlmOps.semIncrBuildBase) before streaming deltas into it")
-    val committed = maxGeneration(s, s"$root/members")
-    require(committed <= batchId + 1,
-      s"layout at $root already holds generation batch_id=$committed but the " +
-        s"stream is at batch $batchId — a fresh checkpoint is being replayed " +
-        "against an older layout; point the stream at a fresh layout (or " +
-        "restore the checkpoint)")
-    // The mirror-image splice (round-16 advice): a layout RESTORED from
-    // an older backup against an advanced checkpoint is missing
-    // intermediate generations — pair emission pairs each batch against
-    // every EARLIER generation, so a gap silently under-pairs. Only the
-    // exactly-previous generation (committed == batchId) or a
-    // redelivered one (committed == batchId + 1) is a legal
-    // continuation; anything older is a gapped history.
+    val committed =
+      IdempotentSink.guard(s, Seq(s"$root/members"), batchId, batchId + 1)
+    // a layout restored from an older backup is missing generations;
+    // pairing against every earlier generation would silently under-pair
     require(committed >= batchId,
       s"layout at $root tops out at generation batch_id=$committed but the " +
         s"stream is at batch $batchId — generations " +

@@ -15,7 +15,7 @@ import org.apache.spark.sql.functions._
   * just a union-merge — the operational loop a 100 TB warehouse runs
   * next to its fact ingest.
   *
-  * Replay discipline (the [[IncrementalIndex]] protocol): each batch
+  * Replay discipline ([[IdempotentSink.appendHandler]]): each batch
   * OVERWRITES its own `batch_id=N` directory, so a post-crash replay
   * rewrites identical sketch rows instead of appending duplicates — and
   * even a protocol failure that double-counted a batch would not corrupt
@@ -30,12 +30,11 @@ object SketchMaintainer {
     * per (source, lang) under `dir/batch_id=N`.
     */
   def ingest(dir: String, lgK: Int = 14)(batch: DataFrame, batchId: Long): Unit =
-    batch
+    IdempotentSink.appendHandler(dir)(batch
       .select(col("source"), col("lang"),
         explode(split(trim(lower(col("text"))), "\\s+")).as("w"))
       .groupBy("source", "lang")
-      .agg(hll_sketch_agg(col("w"), lgK).as("sk"))
-      .write.mode("overwrite").parquet(s"$dir/batch_id=$batchId")
+      .agg(hll_sketch_agg(col("w"), lgK).as("sk")), batchId)
 
   /** Current per-source vocabulary estimates from the accumulated sketch
     * table — reads ONLY sketch rows (|sources × langs × batches|), never

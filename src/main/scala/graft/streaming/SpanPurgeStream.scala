@@ -1,7 +1,5 @@
 package graft.streaming
 
-import org.apache.hadoop.fs.Path
-
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StructField, StructType}
@@ -18,14 +16,9 @@ import graft.ops.Snapshots
   * to batch q193 whenever ingest is doc_id-ordered, which
   * SpanPurgeStreamSpec pins as the batch/stream equivalence contract.
   *
-  * Exactly-once discipline (the [[IdempotentSink]] protocol): purged
-  * documents land in `batch_id=N` output partitions with overwrite
-  * mode, the index appends its batch's NEW DISTINCT hashes as a
-  * `batch_id=N` partition, and the probe reads the index RESTRICTED to
-  * `batch_id < N` — so a crash-replayed batch neither re-purges against
-  * its own prior append nor duplicates output rows. The same
-  * fresh-checkpoint guard refuses a stream whose checkpoint is behind
-  * the directories.
+  * Replay: the [[IdempotentSink]] `batch_id=N` log — purged documents
+  * and the batch's NEW DISTINCT index hashes each land in a `batch_id=N`
+  * directory, and the probe reads the index at `batch_id < N`.
   *
   * Scale: per-batch cost is batch-sized plus one index probe keyed on
   * 8-byte hashes (the index holds each span hash ONCE, ever — appends
@@ -36,26 +29,6 @@ object SpanPurgeStream {
 
   private val IndexSchema = StructType(Seq(StructField("h", LongType)))
 
-  private def maxBatchId(s: SparkSession, dir: String): Long = {
-    val p = new Path(dir)
-    val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) -1L
-    else fs.listStatus(p).iterator.map(_.getPath.getName)
-      .filter(_.startsWith("batch_id="))
-      .map(_.stripPrefix("batch_id=").toLong)
-      .foldLeft(-1L)(math.max)
-  }
-
-  private def readOrEmpty(s: SparkSession, dir: String): DataFrame = {
-    val p = new Path(dir)
-    val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-    val schema = IndexSchema.add(StructField("batch_id", LongType))
-    if (fs.exists(p) && fs.listStatus(p).nonEmpty)
-      s.read.schema(schema).parquet(dir)
-    else s.createDataFrame(
-      s.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-  }
-
   /** The foreachBatch handler: purge batch (doc_id, source, text)
     * against the chunk-hash index at `indexDir`, write purged documents
     * to `outDir/batch_id=N`, append the batch's novel hashes as the
@@ -65,19 +38,11 @@ object SpanPurgeStream {
   def handler(indexDir: String, outDir: String)
       (batch: DataFrame, batchId: Long): Unit = {
     val s = batch.sparkSession
-    val committed = math.max(maxBatchId(s, indexDir), maxBatchId(s, outDir))
-    require(committed <= batchId,
-      s"span-purge sink at $indexDir already holds batch_id=$committed but " +
-        s"the stream is at batch $batchId — a fresh checkpoint is being " +
-        "replayed against an older index; point the stream at empty dirs " +
-        "(or restore the checkpoint)")
+    IdempotentSink.guard(s, Seq(indexDir, outDir), batchId, batchId)
     val chunks = graft.queries.Corpus.docChunks(batch)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
-      // replay safety: the batch's own prior append sits at batch_id=N —
-      // excluding batch_id >= N keeps the purge byte-identical to the
-      // first delivery
-      val seen = readOrEmpty(s, indexDir)
+      val seen = IdempotentSink.readOrEmpty(s, indexDir, IndexSchema)
         .filter(col("batch_id") < batchId).select("h")
       // a chunk drops iff its hash was ingested before this batch, or it
       // loses the within-batch keep-first race (corpus-global

@@ -1,8 +1,11 @@
 package graft.queries
 
-import java.nio.file.Files
+import java.nio.file.{Files, Paths}
+
+import org.apache.hadoop.fs.Path
 
 import graft.SparkSpec
+import graft.sources.Layouts
 
 /** q211's decomposed BM25 index: incremental appends must equal the
   * one-shot build, replaying an append must be a byte-level no-op on
@@ -83,6 +86,71 @@ class IncrementalPostingsSpec extends SparkSpec {
     // a vacuum with nothing to do is a no-op
     Corpus.vacuumPostings(spark, dir)
     assert(probe(dir) == after)
+  }
+
+  /** The forget-test index: two appends, then docs 3 and 5 forgotten. */
+  private def forgetIndex(dir: String): Unit = {
+    Corpus.appendPostingsBatch(spark, docs.filter("doc_id <= 4"), dir, 0L)
+    Corpus.appendPostingsBatch(spark, docs.filter("doc_id > 4"), dir, 1L)
+    Corpus.deletePostingsBatch(spark, docs.filter("doc_id IN (3, 5)"), dir, 2L)
+    Layouts.markComplete(spark, dir)
+  }
+
+  private def vacuumSteps(dir: String) =
+    Layouts.replaceSteps(spark, dir, "postings")(Corpus.purgeTombstoned(spark, dir))
+
+  private def fs = new Path("/").getFileSystem(spark.sparkContext.hadoopConfiguration)
+  private def complete(dir: String) = fs.exists(new Path(dir, "_SUCCESS"))
+
+  test("vacuum crash matrix: every mid-swap state reads as an incomplete layout") {
+    def ensure(): String = Layouts.ensureDir(spark, "bm25vac_crashmatrix")(forgetIndex)
+    def drop(dir: String): Unit = fs.delete(new Path(dir), true)
+    def postedDocs(dir: String) = spark.read.parquet(s"$dir/postings")
+      .select("doc_id").distinct().as[Long].collect().toSet
+    val reference = probe(ensure())
+    assert(reference.nonEmpty)
+    val steps = vacuumSteps(ensure()).size
+    // crash after step 1 (purged copy written aside): still complete
+    locally {
+      val dir = ensure()
+      vacuumSteps(dir).take(1).foreach(_())
+      assert(complete(dir), "step 1 is non-destructive")
+      assert(probe(dir) == reference)
+      assert(ensure() == dir, "a complete layout must be reused, not rebuilt")
+      drop(dir)
+    }
+    // crash after each destructive step: marker down, so ensureDir
+    // rebuilds instead of serving missing or half-swapped postings
+    for (k <- 2 until steps) {
+      val dir = ensure()
+      vacuumSteps(dir).take(k).foreach(_())
+      assert(!complete(dir), s"state after step $k must be marked incomplete")
+      val rebuilt = ensure()
+      assert(complete(rebuilt),
+        s"state after step $k must trigger a rebuild to a complete layout")
+      assert(probe(rebuilt) == reference,
+        s"rebuild from crash-after-step-$k must restore the exact probe")
+      drop(rebuilt)
+    }
+    // the whole sequence is the vacuum: complete, bytes purged, same probe
+    val dir = ensure()
+    vacuumSteps(dir).foreach(_())
+    assert(complete(dir))
+    assert(!postedDocs(dir).contains(3L) && !postedDocs(dir).contains(5L))
+    assert(probe(dir) == reference)
+  }
+
+  test("a failed rename inside the swap throws and leaves the layout unmarked") {
+    val dir = Files.createTempDirectory("bm25vacfail_").toString
+    forgetIndex(dir)
+    val steps = vacuumSteps(dir)
+    steps.take(4).foreach(_()) // old postings renamed aside
+    // a plain file now holds the target, so the purged tree cannot move in
+    Files.write(Paths.get(s"$dir/postings"), Array[Byte](1))
+    intercept[java.io.IOException](steps.drop(4).foreach(_()))
+    assert(!complete(dir), "a failed swap must not restamp _SUCCESS")
+    assert(Files.isDirectory(Paths.get(s"$dir/postings.retired")),
+      "the old postings survive aside")
   }
 
   test("df and stats pieces merge decomposably across batches") {

@@ -209,33 +209,18 @@ class IvfAdcSpec extends SparkSpec {
 
   test("compaction crash matrix: every mid-swap state reads as incomplete-layout, never as empty probes") {
     import org.apache.hadoop.fs.Path
-    // the swap's destructive step sequence, replicated verbatim from
-    // ivfAdcCompactGenerations so a crash AFTER each step k can be
-    // simulated; must be kept in lockstep with the production body
-    def compactUpTo(dir: String, k: Int): Unit = {
-      spark.read.parquet(s"$dir/codes")
-        .select("vec_id", "codes", "cell")
-        .write.partitionBy("cell").mode("overwrite")
-        .parquet(s"$dir/codes.compacting") // step 1: tmp written
-      val fs = new Path(dir)
-        .getFileSystem(spark.sparkContext.hadoopConfiguration)
-      if (k >= 2) fs.delete(new Path(s"$dir/_SUCCESS"), false)
-      if (k >= 3) fs.delete(new Path(s"$dir/codes.retired"), true)
-      if (k >= 4) fs.rename(new Path(s"$dir/codes"), new Path(s"$dir/codes.retired"))
-      if (k >= 5) fs.mkdirs(new Path(s"$dir/codes"))
-      if (k >= 6) fs.rename(new Path(s"$dir/codes.compacting"),
-        new Path(s"$dir/codes/batch_id=0"))
-      if (k >= 7) fs.delete(new Path(s"$dir/codes.retired"), true)
-      if (k >= 8) fs.create(new Path(s"$dir/_SUCCESS")).close()
-    }
+    // replay each prefix of the production swap's own step list, so a
+    // crash AFTER each step k is simulated on the real sequence
+    def compactUpTo(dir: String, k: Int): Unit =
+      graft.sources.Layouts.replaceSteps(spark, dir, "codes")(
+        LlmOps.mergeGenerations(spark, dir, "codes")).take(k).foreach(_())
     val e = Tables.embeddings(spark, sf)
     def build(tmp: String): Unit = {
       LlmOps.ivfAdcBuildBase(spark,
         e.filter(pmod(col("vec_id"), lit(5)) =!= 0), tmp)
       LlmOps.ivfAdcAppendDelta(spark,
         e.filter(pmod(col("vec_id"), lit(5)) === 0), tmp, 1L)
-      val p = new Path(tmp, "_SUCCESS")
-      p.getFileSystem(spark.sparkContext.hadoopConfiguration).create(p).close()
+      graft.sources.Layouts.markComplete(spark, tmp)
     }
     def ensure(): String =
       graft.sources.Layouts.ensureDir(spark, "ivfadc_crashmatrix")(build)
@@ -258,7 +243,7 @@ class IvfAdcSpec extends SparkSpec {
     // crash after each destructive step: the state must read as an
     // INCOMPLETE layout (marker down -> ensureDir rebuilds), never as a
     // complete layout with missing/empty codes
-    for (k <- 2 to 7) {
+    for (k <- 2 to 6) {
       val dir = ensure()
       compactUpTo(dir, k)
       assert(!fs.exists(new Path(s"$dir/_SUCCESS")),
@@ -270,10 +255,10 @@ class IvfAdcSpec extends SparkSpec {
         s"rebuild from crash-after-step-$k must restore the exact probe")
       fs.delete(new Path(rebuilt), true)
     }
-    // and the full sequence (step 8) is the compaction: complete, same probe
+    // and the full sequence (step 7) is the compaction: complete, same probe
     locally {
       val dir = ensure()
-      compactUpTo(dir, 8)
+      compactUpTo(dir, 7)
       assert(fs.exists(new Path(s"$dir/_SUCCESS")))
       assert(spark.read.parquet(s"$dir/codes")
         .select("batch_id").distinct().as[Long].collect().toSeq == Seq(0L))

@@ -4,6 +4,7 @@ import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
+import graft.queries.LlmOps
 
 /** Exactly-once sink semantics under redelivery: a replayed batch must
   * change NOTHING — not the appended fact partitions, not the upsert
@@ -81,10 +82,50 @@ class IdempotentSinkSpec extends SparkSpec {
     val e = intercept[IllegalArgumentException](
       IdempotentSink.upsertHandler(dir, Seq("k"))(kv((2L, 1L, "b")), 3L))
     assert(e.getMessage.contains("fresh checkpoint"))
-    val dir2 = tmp("guard2")
-    IdempotentSink.appendHandler(dir2)(kv((1L, 1L, "a")), 5L)
-    intercept[IllegalArgumentException](
-      IdempotentSink.appendHandler(dir2)(kv((2L, 1L, "b")), 3L))
+  }
+
+  test("every batch_id handler refuses batch 3 after batch 5") {
+    val d = "/root/testdata/sf0.001"
+    val docs = graft.Tables.documents(spark, d)
+      .select(col("doc_id"), col("source"), col("lang"), col("text"))
+      .filter(col("doc_id") < 40)
+    val emb = graft.Tables.embeddings(spark, d)
+    val semDelta = emb.filter(col("vec_id") % 10 >= 8).limit(3)
+    // (handler, base build, one batch delivered at a given id)
+    val rows: Seq[(String, String => Unit, String => Long => Unit)] = Seq(
+      ("appendHandler", _ => (),
+        r => IdempotentSink.appendHandler(r)(kv((1L, 1L, "a")), _)),
+      ("upsertHandler", _ => (),
+        r => IdempotentSink.upsertHandler(r, Seq("k"))(kv((1L, 1L, "a")), _)),
+      ("SpanPurgeStream.handler", _ => (),
+        r => SpanPurgeStream.handler(s"$r/index", s"$r/out")(
+          docs.select("doc_id", "source", "text"), _)),
+      ("IncrementalIndex.probeAndIndex", _ => (),
+        r => IncrementalIndex.probeAndIndex(s"$r/bands", s"$r/sigs", s"$r/pairs")(
+          docs.select(col("doc_id"), split(col("text"), " ").as("tokens")), _)),
+      // this handler also refuses a gapped history, so batches 0-4 land first
+      ("SemDedupIngestStream.ingest",
+        r => {
+          LlmOps.semIncrBuildBase(spark, emb.filter(col("vec_id") % 10 < 8), r)
+          (0L to 4L).foreach(SemDedupIngestStream.ingest(r)(semDelta, _))
+        },
+        r => SemDedupIngestStream.ingest(r)(semDelta, _)),
+      ("IvfAdcIngestStream.ingest",
+        r => LlmOps.ivfAdcBuildBase(spark, emb.filter(pmod(col("vec_id"), lit(5)) =!= 0), r),
+        r => IvfAdcIngestStream.ingest(r)(
+          emb.filter(pmod(col("vec_id"), lit(5)) === 0).limit(3), _)),
+      ("CurationFunnelStream.ingest", _ => (),
+        r => CurationFunnelStream.ingest(r)(docs, _)),
+      ("SketchMaintainer.ingest", _ => (),
+        r => SketchMaintainer.ingest(r)(docs, _)))
+    for ((name, base, handle) <- rows) {
+      val r = tmp("guard_" + name.takeWhile(_ != '.'))
+      base(r)
+      handle(r)(5L)
+      val e = withClue(s"$name: ")(
+        intercept[IllegalArgumentException](handle(r)(3L)))
+      assert(e.getMessage.contains("fresh checkpoint"), s"$name: ${e.getMessage}")
+    }
   }
 
   test("sweep keeps the replay parent and refuses keep < 2") {

@@ -1,5 +1,7 @@
 package graft.streaming
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 
@@ -54,6 +56,30 @@ class StreamCurationSpec extends SparkSpec {
     val n = docs.count()
     assert(spark.read.parquet(s"$r/facts").count() == n,
       "facts must hold every doc exactly once after the replay")
+  }
+
+  test("a fresh checkpoint is refused before it touches facts/") {
+    val r = root()
+    val slice = (b: Long) => docs.filter(pmod(col("doc_id"), lit(2)) === b)
+    CurationFunnelStream.ingest(r)(slice(0L), 0L)
+    CurationFunnelStream.ingest(r)(slice(1L), 1L)
+    // file name -> content digest of every file under facts/batch_id=0
+    def facts0(): Map[String, String] = {
+      val base = java.nio.file.Paths.get(s"$r/facts/batch_id=0")
+      val files = java.nio.file.Files.walk(base)
+      try files.iterator().asScala.filter(java.nio.file.Files.isRegularFile(_))
+        .map(f => base.relativize(f).toString ->
+          java.security.MessageDigest.getInstance("MD5")
+            .digest(java.nio.file.Files.readAllBytes(f))
+            .map(b => f"$b%02x").mkString).toMap
+      finally files.close()
+    }
+    val before = facts0()
+    assert(before.nonEmpty)
+    val e = intercept[IllegalArgumentException](
+      CurationFunnelStream.ingest(r)(slice(1L), 0L))
+    assert(e.getMessage.contains("fresh checkpoint"))
+    assert(facts0() == before, "the refused batch must leave facts/batch_id=0 as it was")
   }
 
   test("the same handler runs under a live MemoryStream with identical results") {
