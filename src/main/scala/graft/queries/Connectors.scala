@@ -1004,9 +1004,9 @@ object Connectors {
       .filter(pmod(col("c_custkey"), lit(2)) === 0)
       .select(col("c_custkey").as("id"), col("c_name").as("name"),
         col("c_acctbal").cast("double").as("value"))
-      .orderBy("id")
       .collect()
       .map(r => (r.getLong(0), r.getString(1), r.getDouble(2)))
+      .sortBy(_._1) // driver-side: the sequence is dim-sized
     val n = items.length
     val pages = java.nio.file.Paths.get(s"$root/pages")
     Seq(n / 3, 2 * n / 3, n).foreach { until =>
@@ -1023,8 +1023,9 @@ object Connectors {
         .start()
       q.awaitTermination()
     }
-    s.read.parquet(s"$root/ingest")
-      .select(col("batch_id").cast("long").as("batch_id"), col("id"),
+    graft.streaming.IdempotentSink.readOrEmpty(s, s"$root/ingest",
+        graft.sources.v2.PagedRestV2.Schema)
+      .select(col("batch_id"), col("id"),
         col("name"), col("value"), col("page"))
       .orderBy("batch_id", "id")
   }

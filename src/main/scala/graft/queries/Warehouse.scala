@@ -3842,7 +3842,6 @@ object Warehouse {
   private val CfMinCommon = 2L
   private val CfTopK = 50
   private val CfMaxBlock = 10000L
-  private val CfBuckets = 64
   /** q173 pair-mass probe results per fixture dir (fixtures are
     * immutable for a process's lifetime). */
   private val CfMassCache =
@@ -3851,56 +3850,45 @@ object Warehouse {
   /** q173: CF NEIGHBORS — user-user collaborative filtering over
     * purchase sets: the top-[[CfTopK]] customer pairs by exact Jaccard
     * of their distinct part sets ("customers like you bought…" — the
-    * recommender complement of q164's item-item rules). Candidates come
-    * from INVERTED-INDEX BLOCKING: only pairs sharing ≥ 1 part are ever
-    * generated (a part's buyer list is the posting), so the pair space
-    * is Σ_part |buyers|² — never customers², and a degenerate hub part
-    * is excluded by [[CfMaxBlock]] (q42/q164 guard; at TPC-H uniformity
-    * no real part approaches it). In the single-pass regime the buyer
-    * lists are materialized per item as collect_list groups and the
-    * pair space is GENERATED in-task (double explode), so the guard is
-    * a size() filter and no self-join exchange exists; common counts
-    * come off the pair aggregate as a pure count (each shared part
-    * contributes exactly one pair row); jaccard_ppm = common·10⁶ DIV
-    * (|u|+|v|−common) is exact-integer and filtered to common ≥
-    * [[CfMinCommon]] (a single-part overlap is noise, not taste); sizes
-    * ride the pair rows as carried columns (attached once by a per-cust
-    * count window on the distinct frame — no join anywhere in the
-    * single-pass plan). Top-K via the q96 bucket prefilter, total order
-    * (jaccard DESC, u, v).
+    * recommender complement of q164's item-item rules). Only pairs that
+    * share a part are ever counted: a part's buyer list is its POSTING,
+    * so the pair space is Σ_part |buyers|², never customers². A
+    * degenerate hub part (more than [[CfMaxBlock]] buyers, the q42/q164
+    * guard) stays out of the intersection but still counts in the sizes.
+    * A pair needs common ≥ [[CfMinCommon]] (a single-part overlap is
+    * noise, not taste); jaccard_ppm = common·10⁶ DIV (|u|+|v|−common) is
+    * exact-integer; the order is total on (jaccard DESC, u, v).
     *
-    * Remaining exchanges are the exact-Jaccard floor: one cust-keyed
-    * exchange shared by the corpus distinct and the size window, one
-    * item-keyed exchange building the postings, the Σ|block|²
-    * pair-space shuffle — irreducible, because a (u,v) pair's
-    * contributions arise under DIFFERENT item partitions and exactness
-    * forbids sketching them — and the bounded top-K rank regroup.
+    * Plan, with no join and no pair row before counting:
+    *  1. one exchange by cust serves the (cust, item) distinct and the
+    *     per-cust size window, so `sz` rides each row;
+    *  2. POSTINGS: one exchange by item, `array_sort(collect_list(
+    *     struct(cust, sz)))` per part, hubs dropped by `size(ms)`;
+    *  3. TAILS: member u at position p of a posting pairs with
+    *     `slice(ms, p + 2, …)`, exactly the members v > u with their
+    *     sizes; empty tails are dropped;
+    *  4. one exchange by u collects u's tails, and
+    *     [[graft.functions.Overlap.OverlapCounts]] counts each v across
+    *     them in a compiled open-addressing map, emitting (v, szv,
+    *     common) for common ≥ [[CfMinCommon]];
+    *  5. the exploded neighbours take a bounded top-K
+    *     (TakeOrderedAndProject) and are ranked.
+    * Memory per group: u's tails hold at most |u|·[[CfMaxBlock]]
+    * entries, and so does the kernel's map.
     *
-    * BOUNDED-SCRATCH regime (round-18): Σ|block|² is quadratic in
-    * block density, so on a densifying corpus the one-shot pair-space
-    * shuffle eventually outgrows ANY fixed scratch disk (at 30× it is
-    * ~167 GB). When the estimated pair mass exceeds
-    * `spark.graft.q173.stepPairBudget` (rows; default 4·10⁸ ≈ a few GB
-    * of compressed shuffle), the pair space is processed in C =
-    * ⌈mass/2budget⌉ customer-hash CHUNKS of the v side: step j joins
-    * the FULL u side against only v-chunk j, so every (u,v) pair lands
-    * in exactly one step — its common count, jaccard and the step-local
-    * top-K are complete there, and the global top-K is the top-K of the
-    * C·K union (each step's survivors are collected — K·C rows, bounded
-    * by construction — and each step's shuffle files are reclaimed
-    * before the next step launches). Peak scratch is EXPECTED to sit at
-    * the budget: chunks are xxhash64(cust)-balanced, so residual
-    * customer/block skew can push one step somewhat past it — a skew
-    * headroom (`spark.graft.q173.skewHeadroomPct`, default 25) inflates
-    * the chunk count so that imbalance lands inside the budget, and
-    * [[CfMaxBlock]] bounds the worst single block outright. Total work
-    * is unchanged (the same Σ|block|² pair rows flow, C jobs instead of
-    * one). Below the budget the single-pass plan is one LINEAR lazy
-    * pipeline — no eager materialization of any kind (round-20; the
-    * round-19 eager localCheckpoint anti-scaled 0.19 on the driver's
-    * 32-core interleaved bench); the only sub-budget cost is the
-    * dim-sized mass probe, memoized per fixture dir so a bench/verify
-    * process pays it once.
+    * BOUNDED SCRATCH: the tails carry Σ|block|²/2 entries through the u
+    * exchange, quadratic in block density (the `mass` probe below,
+    * memoized per fixture dir). When that exceeds
+    * `spark.graft.q173.stepPairBudget` (entries; default 4·10⁸), the
+    * postings are persisted once and the same frame runs in C =
+    * ⌈mass/2budget⌉ steps, inflated by `spark.graft.q173.skewHeadroomPct`
+    * (default 25) because xxhash64 balances steps only in expectation.
+    * Step j keeps the tails whose u has pmod(xxhash64(u), C) = j, so
+    * every pair is counted in exactly one step, the one owning u, with
+    * about mass/2C entries. Each step collects its own top-K (K rows),
+    * which lets its shuffle files go before the next step launches; the
+    * answer is the top-K of the C·K survivors, and the postings are
+    * released when the steps end.
     */
   def q173CfNeighbors(s: SparkSession, d: String): DataFrame = {
     val itemsRaw = lineitem(s, d)
@@ -3908,180 +3896,77 @@ object Warehouse {
       .join(orders(s, d).select(col("o_orderkey").as("o"),
         col("o_custkey").as("cust")), Seq("o"))
       .select(col("cust"), col("item"))
-    val itemsPlan = itemsRaw.distinct()
-    def derived(items: DataFrame): (DataFrame, DataFrame, DataFrame) = {
-      val sizes = items.groupBy("cust").agg(count(lit(1)).as("sz"))
-      val okAgg = items.groupBy("item").agg(count(lit(1)).as("bsz"))
-        .filter(col("bsz") <= CfMaxBlock)
-      val blocks = items.join(okAgg.select("item"), Seq("item"))
-      (sizes, okAgg, blocks)
-    }
-    val ord = Seq(col("jaccard_ppm").desc, col("u").asc, col("v").asc)
-    val wTop = Window.partitionBy(lit(1)).orderBy(ord: _*)
-
-    def attachJaccard(sizes: DataFrame)(pairCounts: DataFrame): DataFrame =
-      pairCounts
-        .filter(col("common") >= CfMinCommon)
-        .join(sizes.select(col("cust").as("u"), col("sz").as("szu")), Seq("u"))
-        .join(sizes.select(col("cust").as("v"), col("sz").as("szv")), Seq("v"))
-        .withColumn("jaccard_ppm",
-          expr("common * 1000000 DIV (szu + szv - common)"))
-    def pairCountsOf(uSide: DataFrame, vSide: DataFrame): DataFrame = uSide
-      .select(col("item"), col("cust").as("u"))
-      .join(vSide.select(col("item"), col("cust").as("v")), Seq("item"))
-      .filter(col("u") < col("v"))
-      // explicit repartition on the grouping keys: the pair space is
-      // near-unique per partition (map-side combine would collapse
-      // ~nothing), so pre-satisfying the aggregate's distribution buys
-      // a single complete-mode hash aggregate instead of a useless
-      // partial pass over ~Σ|block|² rows — same shuffle volume
-      .repartition(col("u"), col("v"))
-      .groupBy("u", "v").agg(count(lit(1)).as("common"))
-    def bucketPrefilter(df: DataFrame): DataFrame = {
-      val wBucket = Window.partitionBy("__bucket").orderBy(ord: _*)
-      df.withColumn("__bucket", pmod(xxhash64(col("u"), col("v")),
-          lit(CfBuckets)))
-        .withColumn("__brank", row_number().over(wBucket))
-        .filter(col("__brank") <= CfTopK)
-        .drop("__bucket", "__brank")
-    }
-
-    // the pair mass Σ|block|² decides the plan: one dim-sized aggregate
-    // row, collected before the expensive leg is even constructed —
-    // memoized per fixture dir (immutable for a process's lifetime, the
-    // Tables.enableReuse contract), so repeated bench/verify invocations
-    // pay the probe job once
+    // one dim-sized aggregate row, collected before the expensive leg is
+    // built; memoized per fixture dir (immutable for a process's
+    // lifetime, the Tables.enableReuse contract)
     val mass: Long = CfMassCache.computeIfAbsent(d, _ =>
       java.lang.Long.valueOf(
-        Option(derived(itemsPlan)._2.agg(sum(col("bsz") * col("bsz")))
-          .head.get(0))
+        Option(itemsRaw.distinct().groupBy("item").agg(count(lit(1)).as("bsz"))
+          .filter(col("bsz") <= CfMaxBlock)
+          .agg(sum(col("bsz") * col("bsz"))).head.get(0))
           .map(_.asInstanceOf[Long]).getOrElse(0L))).longValue
     val budget = s.conf.getOption("spark.graft.q173.stepPairBudget")
       .map(_.toLong).getOrElse(400000000L)
-    // skew headroom (round-19 / ADVICE): xxhash64-balanced chunks are
-    // balanced only in expectation — inflating the chunk count by this
-    // factor keeps a somewhat-heavy step's pair mass inside the budget
-    // without relying on perfect balance (CfMaxBlock bounds the worst
-    // single block outright)
     val headroomPct = s.conf.getOption("spark.graft.q173.skewHeadroomPct")
       .map(_.toLong).getOrElse(25L)
     val chunks = math.max(1L,
       (mass / 2 * (100 + headroomPct) / 100 + budget - 1) / budget).toInt
 
-    if (chunks <= 1) {
-      // SINGLE-PASS regime (round-20): one LINEAR pipeline, no
-      // materialization and no self-join. The round-19 eager
-      // localCheckpoint of the items frame deduplicated the plan but
-      // measured 15.75 s median on the driver's interleaved 32-core
-      // bench (vs 2.99 s at 8 cores — anti-scaling 0.19): every
-      // invocation paid a separate block-manager materialization job
-      // whose cost grows with partition count and whose blocks are
-      // never released inside the invocation. Instead of materializing
-      // the multi-consumer frame, the plan is restructured so there IS
-      // only one consumer (guide §1.1 first principles, §2.4 remove
-      // shuffles outright):
-      //   1. ONE exchange by cust serves BOTH the (cust,item) distinct
-      //      (HashPartitioning(cust) satisfies the aggregate's
-      //      ClusteredDistribution(cust,item)) and the per-cust size
-      //      window — `sz` rides each row, so the two sizes joins of
-      //      the old plan disappear;
-      //   2. the per-item blocks become collect_list groups (bounded by
-      //      CfMaxBlock, the same guard as okAgg — `size(ms)` IS bsz),
-      //      and the pair space is GENERATED in-task by a double
-      //      explode instead of a second shuffle leg for the self-join;
-      //   3. the pair aggregate keys carry (szu, szv), so jaccard is
-      //      computed inline — zero joins anywhere in the plan.
-      // Same pair set, same counts, same total order → identical rows.
-      val members = itemsRaw
-        .repartition(col("cust"))
-        .dropDuplicates("cust", "item")
-        .withColumn("sz", count(lit(1)).over(Window.partitionBy("cust")))
-      val pairs = members
-        // pin the item exchange at the configured shuffle parallelism
-        // (REPARTITION_BY_NUM — AQE will not coalesce it): the postings
-        // are a few MB so byte-based coalescing shrinks this exchange to
-        // a handful of partitions, but the DOWNSTREAM double explode
-        // generates Σ|block|² pair rows from them (16× amplification at
-        // sf0.1: 6 tasks generated 9M pairs on 32 idle cores — measured
-        // stage 61, 4.7 CPU-s serialized over 6 tasks). Partition count
-        // stays the cluster-tuned conf, not a constant; the groupBy
-        // reuses this exchange (HashPartitioning(item) satisfies it).
-        .repartition(s.conf.get("spark.sql.shuffle.partitions").toInt,
-          col("item"))
-        .groupBy("item")
-        .agg(collect_list(struct(col("cust"), col("sz"))).as("ms"))
-        .filter(size(col("ms")) <= CfMaxBlock)
-        .select(explode(col("ms")).as("a"), col("ms"))
-        // NOTE round-20: generating u<v pairs directly via a
-        // higher-order filter() on the inner array measured ~65% SLOWER
-        // than explode-then-filter (HOF lambdas run interpreted, one
-        // array allocation per outer row, outside whole-stage codegen)
-        // — the plain double Generate + codegen'd comparison stays
-        .select(col("a.cust").as("u"), col("a.sz").as("szu"),
-          explode(col("ms")).as("b"))
-        .filter(col("u") < col("b.cust"))
-        .select(col("u"), col("szu"), col("b.cust").as("v"),
-          col("b.sz").as("szv"))
-      val pairCounts = pairs
-        // same complete-mode-aggregate rationale as pairCountsOf: the
-        // pair space is near-unique per partition, so pre-satisfying
-        // the distribution buys one complete hash aggregate instead of
-        // a useless partial pass ((u,v) ⊆ the grouping keys, so the
-        // exchange is reused by the aggregate)
-        .repartition(col("u"), col("v"))
-        .groupBy("u", "v", "szu", "szv")
-        .agg(count(lit(1)).as("common"))
-        .filter(col("common") >= CfMinCommon)
-        .withColumn("jaccard_ppm",
-          expr("common * 1000000 DIV (szu + szv - common)"))
-      bucketPrefilter(pairCounts)
-        .withColumn("rank", row_number().over(wTop).cast("long"))
-        .filter(col("rank") <= CfTopK)
-        .select(col("rank"), col("u").as("cust_u"), col("v").as("cust_v"),
-          col("common"), col("szu"), col("szv"), col("jaccard_ppm"))
-        .orderBy("rank")
-    } else {
-      // chunked regime: steps re-read the same shared snapshots C
-      // times. persist (NOT localCheckpoint, round-20): the steps'
-      // collects materialize the caches on first use, and both are
-      // RELEASED as soon as the survivors are collected — checkpoint
-      // blocks would outlive the invocation (Dataset.unpersist does not
-      // free them) and accumulate across bench rounds.
-      val itemsP = itemsPlan
+    val postings = itemsRaw
+      .repartition(col("cust"))
+      .dropDuplicates("cust", "item")
+      .withColumn("sz", count(lit(1)).over(Window.partitionBy("cust")))
+      // the item exchange is pinned at the configured shuffle parallelism
+      // (REPARTITION_BY_NUM, which AQE does not coalesce): the postings
+      // are a few MB, but the tails generated from them are Σ|block|²/2
+      // entries, which a byte-coalesced handful of tasks would serialize
+      .repartition(s.conf.get("spark.sql.shuffle.partitions").toInt,
+        col("item"))
+      .groupBy("item")
+      .agg(array_sort(collect_list(struct(col("cust"), col("sz")))).as("ms"))
+      .filter(size(col("ms")) <= CfMaxBlock)
+      .select(col("ms"))
+    val ord = Seq(col("jaccard_ppm").desc, col("u").asc, col("v").asc)
+    // every pair (u, v) of `ms` whose u passes `owns`, counted
+    def neighbours(ms: DataFrame, owns: Column => Column): DataFrame = ms
+      .select(posexplode(col("ms")).as(Seq("p", "m")), col("ms"))
+      .filter(col("p") < size(col("ms")) - 1 && owns(col("m.cust")))
+      .select(col("m.cust").as("u"), col("m.sz").as("szu"),
+        slice(col("ms"), col("p") + 2, size(col("ms")) - col("p") - 1)
+          .as("tail"))
+      .groupBy("u", "szu").agg(collect_list(col("tail")).as("tails"))
+      .select(col("u"), col("szu"), explode(
+        graft.functions.Overlap.overlapCounts(col("tails"), CfMinCommon)).as("n"))
+      .select(col("u"), col("n.v").as("v"), col("n.common").as("common"),
+        col("szu"), col("n.szv").as("szv"))
+      .withColumn("jaccard_ppm",
+        expr("common * 1000000 DIV (szu + szv - common)"))
+    def top(pairs: DataFrame): DataFrame = pairs.orderBy(ord: _*).limit(CfTopK)
+    def ranked(pairs: DataFrame): DataFrame = top(pairs)
+      .withColumn("rank", row_number()
+        .over(Window.partitionBy(lit(1)).orderBy(ord: _*)).cast("long"))
+      .select(col("rank"), col("u").as("cust_u"), col("v").as("cust_v"),
+        col("common"), col("szu"), col("szv"), col("jaccard_ppm"))
+      .orderBy("rank")
+
+    if (chunks <= 1) ranked(neighbours(postings, _ => lit(true)))
+    else {
+      val shared = postings
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      val (sizes, _, blocks) = derived(itemsP)
-      val blocksCk = blocks
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      val stepCols = Seq(col("u"), col("v"), col("common"),
-        col("szu"), col("szv"), col("jaccard_ppm"))
-      // schema captured from the step plan itself so the chunked path's
-      // output types can never drift from the single-pass plan's
-      var stepSchema: org.apache.spark.sql.types.StructType = null
-      val survivors = (0 until chunks).flatMap { j =>
-        val vChunk = blocksCk.filter(
-          pmod(xxhash64(col("cust")), lit(chunks)) === j)
-        val step = bucketPrefilter(
-            attachJaccard(sizes)(pairCountsOf(blocksCk, vChunk)))
-          .orderBy(ord: _*).limit(CfTopK)
-          .select(stepCols: _*)
-        if (stepSchema == null) stepSchema = step.schema
-        // K rows per step, bounded by construction — the one collect
-        // this operator is ALLOWED: it is what releases the step's
-        // multi-GB shuffle from disk before the next step launches
-        // (drop the plan reference, nudge the ContextCleaner), which is
-        // the entire point of the chunked regime
-        val rows = step.collect().toSeq
-        System.gc()
-        rows
-      }
-      blocksCk.unpersist(blocking = false)
-      itemsP.unpersist(blocking = false)
-      s.createDataFrame(s.sparkContext.parallelize(survivors, 1), stepSchema)
-        .withColumn("rank", row_number().over(wTop).cast("long"))
-        .filter(col("rank") <= CfTopK)
-        .select(col("rank"), col("u").as("cust_u"), col("v").as("cust_v"),
-          col("common"), col("szu"), col("szv"), col("jaccard_ppm"))
-        .orderBy("rank")
+      try {
+        def step(j: Int): DataFrame =
+          top(neighbours(shared, u => pmod(xxhash64(u), lit(chunks)) === j))
+        // K rows per step: collecting them ends the step, and once its
+        // plan is unreachable the GC lets the ContextCleaner reclaim its
+        // shuffle files before the next step launches
+        val survivors = (0 until chunks).flatMap { j =>
+          val rows = step(j).collect().toSeq
+          System.gc()
+          rows
+        }
+        ranked(s.createDataFrame(
+          s.sparkContext.parallelize(survivors, 1), step(0).schema))
+      } finally shared.unpersist(blocking = false)
     }
   }
 

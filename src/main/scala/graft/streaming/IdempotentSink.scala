@@ -25,17 +25,16 @@ import org.apache.spark.sql.types.{LongType, StructField, StructType}
   * on a fresh checkpoint against an older sink, and running it would
   * splice two ingest histories. The highest allowed id is the batch id
   * itself, except in a layout whose generation 0 is a base build: there
-  * stream batch N owns generation N + 1, and the handler passes
-  * `batchId + 1`. Every handler guards before its first write.
+  * stream batch N owns generation N + 1, and [[guardGenerations]]
+  * allows `batchId + 1` and also refuses a gap below N. Every handler
+  * guards before its first write.
   *
   * Users:
   *  - [[appendHandler]]: q254's REST cursor stream, [[SketchMaintainer]];
   *  - [[upsertHandler]] (below; its generations are `gen=N`);
   *  - [[SpanPurgeStream]], [[IncrementalIndex]], [[CurationFunnelStream]];
   *  - the generation handlers [[SemDedupIngestStream]] and
-  *    [[IvfAdcIngestStream]] (allowed id `batchId + 1`; the semantic
-  *    handler also refuses a gap, since it pairs each batch against
-  *    every earlier generation).
+  *    [[IvfAdcIngestStream]], through [[guardGenerations]].
   *
   * KEYED UPSERT ([[upsertHandler]]): the q67 MERGE as a streaming sink.
   * State lives in generation directories `gen=N` (N = the batch id that
@@ -82,6 +81,23 @@ object IdempotentSink {
       allowed: Long): Long = {
     val top = dirs.map(committed(s, _)).max
     refuse(top, allowed, batchId, dirs)
+    top
+  }
+
+  /** The guard of a generation layout: generation 0 is a base build and
+    * stream batch N owns generation N + 1, so the allowed id is
+    * `batchId + 1`. The layout must also hold generation N or N + 1: a
+    * top generation below N is a gap (a layout restored from an older
+    * backup), and the missing generations' rows would drop out of every
+    * later read. Returns the largest committed generation. */
+  def guardGenerations(s: SparkSession, dir: String, batchId: Long): Long = {
+    val top = guard(s, Seq(dir), batchId, batchId + 1)
+    require(top >= batchId,
+      s"$dir tops out at generation batch_id=$top but the stream is at " +
+        s"batch $batchId — generations ${top + 1}..$batchId are missing " +
+        "(layout restored from an older backup?), and their rows would " +
+        "silently drop out of every later read. Restore a matching layout " +
+        "or restart the stream from a checkpoint aligned with this layout")
     top
   }
 

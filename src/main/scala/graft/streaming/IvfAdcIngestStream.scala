@@ -23,7 +23,9 @@ import org.apache.spark.sql.DataFrame
   *
   * Replay: the [[IdempotentSink]] `batch_id=N` log with a generation
   * offset — stream batch N owns generation N+1 of `codes/`
-  * (generation 0 is the base build).
+  * (generation 0 is the base build); the generation guard
+  * ([[IdempotentSink.guardGenerations]]) refuses a replayed-over layout
+  * and a gapped one.
   */
 object IvfAdcIngestStream {
 
@@ -42,7 +44,7 @@ object IvfAdcIngestStream {
         s"no frozen $t/ table at $root — build the base layout " +
           "(LlmOps.ivfAdcBuildBase) before streaming deltas into it")
     }
-    IdempotentSink.guard(s, Seq(s"$root/codes"), batchId, batchId + 1)
+    IdempotentSink.guardGenerations(s, s"$root/codes", batchId)
     graft.queries.LlmOps.ivfAdcAppendDelta(s,
       batch.select("vec_id", "embedding"), root, batchId + 1)
   }

@@ -24,9 +24,10 @@ import org.apache.spark.sql.DataFrame
   * Replay: the [[IdempotentSink]] `batch_id=N` log with a generation
   * offset — stream batch N owns generation N+1 (generation 0 is the
   * base assignment) of both `members/` and `pairs/`, and reads prior
-  * generations at `batch_id < N+1`. Besides the shared guard, a batch
-  * refuses a GAP (top generation below N): only the previous or its
-  * own generation is a legal continuation.
+  * generations at `batch_id < N+1`. The generation guard
+  * ([[IdempotentSink.guardGenerations]]) also refuses a GAP (top
+  * generation below N): only the previous or its own generation is a
+  * legal continuation.
   */
 object SemDedupIngestStream {
 
@@ -43,17 +44,8 @@ object SemDedupIngestStream {
     require(fs.exists(new org.apache.hadoop.fs.Path(s"$root/cents")),
       s"no frozen cents/ seed table at $root — build the base layout " +
         "(LlmOps.semIncrBuildBase) before streaming deltas into it")
-    val committed =
-      IdempotentSink.guard(s, Seq(s"$root/members"), batchId, batchId + 1)
-    // a layout restored from an older backup is missing generations;
-    // pairing against every earlier generation would silently under-pair
-    require(committed >= batchId,
-      s"layout at $root tops out at generation batch_id=$committed but the " +
-        s"stream is at batch $batchId — generations " +
-        s"${committed + 1}..$batchId are missing (layout restored from an " +
-        "older backup?); pairs against the absent generations would be " +
-        "silently dropped. Restore a matching layout or restart the stream " +
-        "from a checkpoint aligned with this layout")
+    // pairing against every earlier generation needs all of them
+    IdempotentSink.guardGenerations(s, s"$root/members", batchId)
     graft.queries.LlmOps.semIncrAppendDelta(s,
       batch.select("vec_id", "embedding"), root, batchId + 1)
   }

@@ -607,6 +607,9 @@ class WarehouseSpec extends SparkSpec {
     assert(got._8 == (c2 - c1) * 1000000L / n && got._8 >= 0)
   }
 
+  // single-pass q173 at sf0.001, local[4], mass probe memoized
+  private val SinglePassJobs = 6
+
   test("q173 CF neighbors equal a brute-force Jaccard replay; blocking " +
     "loses no pair above the common-count floor") {
     val oc = Tables.orders(spark, d)
@@ -633,19 +636,30 @@ class WarehouseSpec extends SparkSpec {
     // Jaccard sanity: common bounded by the smaller set
     got.foreach(r => assert(r._4 <= math.min(r._5, r._6)))
     assert(got.nonEmpty, "fixture must surface CF neighbors")
+    // the single-pass plan, its mass probe memoized by the run above
+    val (single, jobs) = jobsRunBy {
+      val df = Warehouse.q173CfNeighbors(spark, d)
+      df.collect()
+      df
+    }
+    assert(jobs <= SinglePassJobs, s"single-pass q173 ran $jobs jobs")
     // BOUNDED-SCRATCH regime: a pair budget far below the fixture's
-    // Σ|block|² forces the v-chunked multi-step plan — identical rows,
-    // identical schema, at several chunk counts
-    val single = Warehouse.q173CfNeighbors(spark, d)
+    // Σ|block|² forces the u-chunked multi-step plan — identical rows,
+    // identical schema, at several chunk counts, and the persisted
+    // postings are released when the steps end
     // fixture Σ|block|² ≈ 149k → chunks = ⌈1.25·mass/2budget⌉ (25%
     // skew headroom): 11 and 4 steps
     for (budget <- Seq("9000", "30000")) {
       spark.conf.set("spark.graft.q173.stepPairBudget", budget)
       try {
-        val chunked = Warehouse.q173CfNeighbors(spark, d)
-        assert(chunked.schema == single.schema, s"budget=$budget schema")
-        assert(chunked.as[(Long, Long, Long, Long, Long, Long, Long)]
-          .collect().toSeq == expected, s"budget=$budget rows")
+        val ((schema, rows), left) = persistedBy {
+          val chunked = Warehouse.q173CfNeighbors(spark, d)
+          (chunked.schema, chunked.as[(Long, Long, Long, Long, Long, Long, Long)]
+            .collect().toSeq)
+        }
+        assert(schema == single.schema, s"budget=$budget schema")
+        assert(rows == expected, s"budget=$budget rows")
+        assert(left.isEmpty, s"budget=$budget left RDDs $left persisted")
       } finally spark.conf.unset("spark.graft.q173.stepPairBudget")
     }
   }

@@ -91,6 +91,8 @@ class IdempotentSinkSpec extends SparkSpec {
       .filter(col("doc_id") < 40)
     val emb = graft.Tables.embeddings(spark, d)
     val semDelta = emb.filter(col("vec_id") % 10 >= 8).limit(3)
+    val ivfBase = emb.filter(pmod(col("vec_id"), lit(5)) =!= 0)
+    val ivfDelta = emb.filter(pmod(col("vec_id"), lit(5)) === 0).limit(3)
     // (handler, base build, one batch delivered at a given id)
     val rows: Seq[(String, String => Unit, String => Long => Unit)] = Seq(
       ("appendHandler", _ => (),
@@ -103,7 +105,8 @@ class IdempotentSinkSpec extends SparkSpec {
       ("IncrementalIndex.probeAndIndex", _ => (),
         r => IncrementalIndex.probeAndIndex(s"$r/bands", s"$r/sigs", s"$r/pairs")(
           docs.select(col("doc_id"), split(col("text"), " ").as("tokens")), _)),
-      // this handler also refuses a gapped history, so batches 0-4 land first
+      // the generation handlers also refuse a gapped history, so
+      // batches 0-4 land first
       ("SemDedupIngestStream.ingest",
         r => {
           LlmOps.semIncrBuildBase(spark, emb.filter(col("vec_id") % 10 < 8), r)
@@ -111,9 +114,11 @@ class IdempotentSinkSpec extends SparkSpec {
         },
         r => SemDedupIngestStream.ingest(r)(semDelta, _)),
       ("IvfAdcIngestStream.ingest",
-        r => LlmOps.ivfAdcBuildBase(spark, emb.filter(pmod(col("vec_id"), lit(5)) =!= 0), r),
-        r => IvfAdcIngestStream.ingest(r)(
-          emb.filter(pmod(col("vec_id"), lit(5)) === 0).limit(3), _)),
+        r => {
+          LlmOps.ivfAdcBuildBase(spark, ivfBase, r)
+          (0L to 4L).foreach(IvfAdcIngestStream.ingest(r)(ivfDelta, _))
+        },
+        r => IvfAdcIngestStream.ingest(r)(ivfDelta, _)),
       ("CurationFunnelStream.ingest", _ => (),
         r => CurationFunnelStream.ingest(r)(docs, _)),
       ("SketchMaintainer.ingest", _ => (),
@@ -126,6 +131,20 @@ class IdempotentSinkSpec extends SparkSpec {
         intercept[IllegalArgumentException](handle(r)(3L)))
       assert(e.getMessage.contains("fresh checkpoint"), s"$name: ${e.getMessage}")
     }
+  }
+
+  test("a generation layout refuses a batch above its top generation") {
+    // a layout holding only generation 0 (a base build restored from an
+    // older backup) must not take stream batch 5: generations 1-5 would
+    // drop out of every later probe
+    val emb = graft.Tables.embeddings(spark, "/root/testdata/sf0.001")
+    val r = tmp("gap_ivfadc")
+    LlmOps.ivfAdcBuildBase(spark, emb.filter(pmod(col("vec_id"), lit(5)) =!= 0), r)
+    val e = intercept[IllegalArgumentException](IvfAdcIngestStream.ingest(r)(
+      emb.filter(pmod(col("vec_id"), lit(5)) === 0).limit(3), 5L))
+    assert(e.getMessage.contains("generations 1..5 are missing"), e.getMessage)
+    assert(IdempotentSink.committed(spark, s"$r/codes") == 0L,
+      "the refused batch must not write a generation")
   }
 
   test("sweep keeps the replay parent and refuses keep < 2") {
