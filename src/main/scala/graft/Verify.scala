@@ -10,13 +10,13 @@ object Verify {
     val (sfDir, outDir) = (args(0), args(1))
     val only: Option[Set[String]] =
       if (args.length > 2) Some(args(2).split(",").toSet) else None
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = SparkEntry.localCores
     // decoupled for the partition-invariance probe: re-running the board
-    // at e.g. 200 shuffle partitions on the same local[32] must produce
+    // at e.g. 200 shuffle partitions on the same cores must produce
     // hash-identical results — sort-tie and bucket-count assumptions
     // hide exactly there
     val shufflePartitions =
-      sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_PARTITIONS", cpus)
+      sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_PARTITIONS", cpus.toString)
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", shufflePartitions)

@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 
 import graft.Tables._
-import graft.functions.VectorExpressions
+import graft.functions.{Overlap, VectorExpressions}
 import graft.ops.Snapshots
 import Num.{sumD, avgD}
 
@@ -565,28 +565,26 @@ object LlmOps {
     val base = documents(s, d)
       .filter(col("lang") === "en" && col("source") === "src0" && size(t) >= 2)
       .select(col("doc_id"), grams.as("grams"))
-    // Exact-Jaccard leg, INVERTED-INDEX-shaped: an all-pairs theta-join
-    // would compare every gram array pairwise — quadratic in the slice
-    // even when almost no pair shares a gram (it times the 30× scale
-    // gate out). Candidates are pairs sharing ≥ 1 bigram (a Jaccard
-    // ≥ 0.5 pair always does; grams are non-empty under size(t) >= 2),
-    // counted via one gram-keyed equi-join —
-    // Σ df(gram)² work, which is the TRUE pair mass instead of n²/2.
-    // grams are distinct ([[graft.functions.MinHash.shingles]]), so
-    // |∪| = sza + szb − inter and `2·|∩| ≥ |∪|` ⇔ `3·inter ≥ sza+szb` —
-    // the identical integer-arithmetic pair set, no float boundary.
-    val inv = base.select(col("doc_id"), size(col("grams")).as("sz"),
+    lsh.unionByName(jaccardHalfPairs(base))
+  }
+
+  /** The exact-Jaccard dedup edges of a `(doc_id, grams)` frame (one row
+    * per doc, `grams` its distinct shingles): every pair with Jaccard
+    * ≥ 0.5, as (id_a, id_b) with id_a < id_b. Shared by the batch edges
+    * ([[dedupEdges]]) and the streaming ledger
+    * ([[graft.streaming.CurationFunnelStream.ledger]]). A Jaccard ≥ 0.5
+    * pair shares a gram (grams are non-empty), so the set-overlap
+    * operator ([[graft.functions.Overlap]], documents as members, grams
+    * as keys) at minCommon 1 sees every candidate — Σ df(gram)² work,
+    * never n²/2. Grams are distinct, so |∪| = sza + szb − common and
+    * `2·|∩| ≥ |∪|` ⇔ `3·common ≥ sza + szb`: integer arithmetic, no
+    * float boundary. */
+  private[graft] def jaccardHalfPairs(base: DataFrame): DataFrame = {
+    val members = base.select(col("doc_id"), size(col("grams")).as("sz"),
       explode(col("grams")).as("g"))
-    val jac = inv.select(col("g"), col("doc_id").as("id_a"), col("sz").as("sza"))
-      .join(inv.select(col("g"), col("doc_id").as("id_b"),
-        col("sz").as("szb")), Seq("g"))
-      .filter(col("id_a") < col("id_b"))
-      .groupBy("id_a", "id_b")
-      .agg(count(lit(1)).as("inter"),
-        max(col("sza")).as("sza"), max(col("szb")).as("szb"))
-      .filter(lit(3) * col("inter") >= col("sza") + col("szb"))
-      .select(col("id_a"), col("id_b"))
-    lsh.unionByName(jac)
+    Overlap.pairs(Overlap.postings(members, "g", "doc_id", "sz"), 1)
+      .filter(lit(3) * col("common") >= col("szu") + col("szv"))
+      .select(col("u").as("id_a"), col("v").as("id_b"))
   }
 
   def q63DedupClusters(s: SparkSession, d: String): DataFrame =
@@ -2406,21 +2404,23 @@ object LlmOps {
     * is exact integer `inter · 10⁶ div min(|A|,|B|)` over the capped
     * profiles — no floats anywhere.
     *
-    * Scale shape: the df guard is a windowed count over the SAME
-    * (shingle) partitioning the candidate self-join hashes on — the q44
-    * bucket-guard pattern — so guard + join ride one exchange, and the
-    * a/b/profile-size branches canonicalize to the same subtree for
-    * exchange reuse (pinned in ContainmentSpec via ReuseCheck-style scan
-    * count). Output is threshold-filtered AND capped at [[ContMaxRows]]
-    * under a total order (cont desc, doc_a, doc_b) — bounded even on an
-    * all-duplicate corpus.
+    * Scale shape: the df guard is a windowed count by shingle; each
+    * profile's size is a per-doc count of its capped shingles, joined
+    * once onto them (AQE broadcasts it when the doc count is small,
+    * which keeps the shingle partitioning, so the operator's key
+    * exchange is elided); and the shared-shingle count is the
+    * set-overlap operator ([[graft.functions.Overlap]], documents as
+    * members, shingles as keys) over the shingles with df ≥ 2, so no
+    * pair row exists before counting and each pair carries both
+    * sizes. Output is threshold-filtered AND capped at
+    * [[ContMaxRows]] under a total order (cont desc, doc_a, doc_b) —
+    * bounded even on an all-duplicate corpus.
     */
   def q97Containment(s: SparkSession, d: String): DataFrame =
     containmentAudit(documents(s, d))
 
   /** Core of q97 over any frame with (doc_id, text) — see q97 scaladoc. */
   private[queries] def containmentAudit(docs: DataFrame): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val t = toks(lower(col("text")))
     val grams = graft.functions.MinHash.shingles(t, ContShingleN)
     val f = docs
@@ -2428,19 +2428,17 @@ object LlmOps {
       .select(col("doc_id"), explode(grams).as("g"))
       .withColumn("df", count(lit(1)).over(Window.partitionBy("g")))
       .filter(col("df") <= ContMaxDf)
-    val sizes = f.groupBy("doc_id").agg(count(lit(1)).as("sz"))
-    val inter = f.select(col("g"), col("doc_id").as("doc_a"))
-      .join(f.select(col("g"), col("doc_id").as("doc_b")), Seq("g"))
-      .filter(col("doc_a") < col("doc_b"))
-      .groupBy("doc_a", "doc_b").agg(count(lit(1)).as("inter"))
-    inter
-      .join(sizes.select(col("doc_id").as("doc_a"), col("sz").as("size_a")), Seq("doc_a"))
-      .join(sizes.select(col("doc_id").as("doc_b"), col("sz").as("size_b")), Seq("doc_b"))
+    // a profile's size counts its singleton shingles too, but only the
+    // shingles two profiles share reach the pair count
+    val members = f.join(f.groupBy("doc_id").agg(count(lit(1)).as("sz")), "doc_id")
+      .filter(col("df") >= 2)
+    Overlap.pairs(Overlap.postings(members, "g", "doc_id", "sz"), 1)
+      .select(col("u").as("doc_a"), col("v").as("doc_b"),
+        col("common").as("inter"), col("szu").as("size_a"),
+        col("szv").as("size_b"))
       .withColumn("cont_ppm",
         expr("inter * 1000000L div least(size_a, size_b)"))
       .filter(col("cont_ppm") >= ContMinPpm)
-      .select(col("doc_a"), col("doc_b"), col("inter"),
-        col("size_a"), col("size_b"), col("cont_ppm"))
       .orderBy(col("cont_ppm").desc, col("doc_a"), col("doc_b"))
       .limit(ContMaxRows)
   }

@@ -1560,25 +1560,23 @@ object Relational {
     * highest-support parts, its [[AlsoTopK]] strongest co-purchase
     * partners by lift. Head parts come off the support histogram
     * (bucket-prefiltered rank, q68 discipline); the pair frame is
-    * q164's a-priori-pruned basket self-join REUSED semantically but
+    * q164's a-priori-pruned basket pairs, reused semantically but
     * restricted by a broadcast head-part semi-join BEFORE pairing —
     * the anchor side of every generated pair is a head part, so the
     * pair space is |head|·|basket| not |basket|². Per anchor, the
     * partner rank window is anchor-partitioned (never global).
     */
   def q192AlsoBought(s: SparkSession, d: String): DataFrame = {
-    // round-20 trims (q164 discipline, guide §2.4/§5): the basket total
-    // n joins as a broadcast 1-row aggregate straight off lineitem
-    // (distinct (o,item) preserves exactly the orderkeys with >= 1
-    // line) instead of a per-invocation driver collect; the snapshot is
-    // item-partitioned (repartition feeds the distinct — HashPartition-
-    // ing(item) satisfies its clustering — and localCheckpoint
-    // preserves the partitioning), so the support aggregate runs
-    // exchange-free off it and no longer needs its own checkpoint. The
-    // items checkpoint itself stays: four consumers (supports, the
-    // anchor semi-join, the partner side, all basket-keyed or
-    // item-keyed) genuinely reuse it, and it is the frame both pair
-    // sides must read twice.
+    // the basket total n joins as a broadcast 1-row aggregate straight
+    // off lineitem (distinct (o,item) preserves exactly the orderkeys
+    // with >= 1 line) instead of a per-invocation driver collect; the
+    // snapshot is item-partitioned (repartition feeds the distinct —
+    // HashPartitioning(item) satisfies its clustering — and
+    // localCheckpoint preserves the partitioning), so the support
+    // aggregate runs exchange-free off it without its own checkpoint.
+    // The items checkpoint stays: four consumers (supports, the anchor
+    // semi-join, the partner side, all basket-keyed or item-keyed)
+    // reuse it, and it is the frame both pair sides read twice.
     val nb = lineitem(s, d)
       .agg(countDistinct(col("l_orderkey")).as("n"))
     val items = lineitem(s, d)

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 
 import graft.Tables._
+import graft.functions.Overlap
 import Num.dec
 
 /** Advanced warehouse analytics — the second ring of relational operators
@@ -309,7 +310,7 @@ object Warehouse {
     */
   // q59's three branches as named builders so the SAME plans q59Sketches
   // joins can be timed one at a time by [[q59Diagnose]] when an in-bench
-  // iteration stalls (round-7 verdict task 8).
+  // iteration stalls.
   private def q59Distincts(li: DataFrame): DataFrame =
     li.groupBy("l_returnflag", "l_orderkey").agg(count(lit(1)).as("__n"))
       .groupBy("l_returnflag")
@@ -349,9 +350,9 @@ object Warehouse {
     li.groupBy("l_returnflag")
       .agg(percentile_approx(col("l_quantity"), lit(0.5), lit(1000)).as("ap50"))
 
-  /** Per-branch attribution for a stalled q59 iteration (round-7 verdict
-    * task 8: the driver hit one ambient 23.7 s iteration that the bench's
-    * adaptive widening absorbed but nothing could attribute). Runs each
+  /** Per-branch attribution for a stalled q59 iteration (an ambient
+    * stall that the bench's adaptive widening absorbs is otherwise
+    * unattributed). Runs each
     * of q59's three constituent aggregations as its own timed noop-write
     * and prints the split on stderr — scheduling-delay stalls hit every
     * branch roughly equally, a plan-cost regression names its branch.
@@ -368,14 +369,13 @@ object Warehouse {
   }
 
   def q59Sketches(s: SparkSession, d: String): DataFrame = {
-    // Benched shape vs verified shape (round-8 verdict task 5): the exact
-    // countDistinct + exact-median branches exist to PIN the sketches'
-    // error bounds — a correctness artifact, not something a 100 TB run
-    // would execute (the scaladoc above has always said only the sketch
-    // columns remain at scale). q59 has been the slowest benched query
-    // for three rounds solely because the bench was billed for the
-    // verification. Under `spark.graft.q59.verifyExact=false` (set ONLY
-    // by Bench's session) the plan is the production shape: one partial
+    // Benched shape vs verified shape: the exact countDistinct +
+    // exact-median branches exist to PIN the sketches' error bounds — a
+    // correctness artifact, not something a 100 TB run would execute
+    // (only the sketch columns remain at scale), so the bench is not
+    // billed for the verification. Under
+    // `spark.graft.q59.verifyExact=false` (set ONLY by Bench's session)
+    // the plan is the production shape: one partial
     // HLL++ / t-digest aggregate straight over the bucketed layout, no
     // join, no histogram. Verify and every test keep the default (true),
     // so the oracled error-pinning row stays the correctness gate.
@@ -440,7 +440,7 @@ object Warehouse {
     * co-located join) — the point of a maintained physical layout is that
     * its one-time cost amortizes across the query mix.
     *
-    * Cross-process idempotence (round-6 verdict task 2b): the default
+    * Cross-process idempotence: the default
     * in-memory catalog forgets table METADATA when the JVM exits while
     * the managed warehouse directory persists on disk — and the harness
     * may run Verify and Bench as separate, possibly interleaved,
@@ -567,7 +567,7 @@ object Warehouse {
     *    non-matching population (+64 absolute slack for small fixtures)
     *    — TRUE on both sides; a mis-sized or mis-hashed filter flips it.
     *
-    * The bloom build is SINGLE-ACTION (round-7 verdict task 6): the
+    * The bloom build is SINGLE-ACTION: the
     * sketch and the exact key count come out of one distributed
     * OR-merging aggregation, sized from a capacity HINT (the role table
     * statistics play for a real runtime filter — it never pre-scans the
@@ -1503,12 +1503,12 @@ object Warehouse {
     * shift every bucket by the total mass of earlier buckets via a
     * buckets×|columns|-row broadcast (its own windows run over that
     * tiny frame). Because the bucket id is a pure function of the value
-    * (round-20; previously a SAMPLED repartitionByRange +
-    * spark_partition_id, whose slice ids are only consistent across the
-    * two passes if the frame is eagerly checkpointed), no
-    * materialization is needed at all: both passes hang off the
-    * histogram aggregate's exchange, which AQE reuses — one fact
-    * explode, no sampling job, no per-invocation checkpoint blocks.
+    * (unlike a sampled repartitionByRange + spark_partition_id, whose
+    * slice ids agree across the two passes only if the frame is eagerly
+    * checkpointed), no materialization is needed at all: both passes
+    * hang off the histogram aggregate's exchange, which AQE reuses —
+    * one fact explode, no sampling job, no per-invocation checkpoint
+    * blocks.
     */
   def q119Profile(s: SparkSession, d: String): DataFrame = {
     // integer column ids through the hot path (2.4M-row explode + the
@@ -1792,7 +1792,7 @@ object Warehouse {
     * arithmetic), and the audit is pure counts + a selected timestamp —
     * nothing float-summed, so the gate hashes exactly.
     *
-    * Scale shape (round 19, guide §1.1 first-principles): the AUDIT never
+    * Scale shape: the AUDIT never
     * needs the grid materialized. On an hourly grid over [t0, t1], LOCF
     * gives every count analytically from the per-user observation stats —
     * n_points = |grid| (global), n_leading_nulls = hours strictly before
@@ -1815,7 +1815,7 @@ object Warehouse {
       .collect().head
     // empty events: the min/max aggregate returns one all-NULL row —
     // degrade to the oracle's empty result (no users → no rows, any
-    // bounds do) instead of an NPE on getLong (round-20, ADVICE item)
+    // bounds do) instead of an NPE on getLong
     val (t0s, t1s) =
       if (bounds.isNullAt(0)) (0L, 0L)
       else (bounds.getLong(0), bounds.getLong(1))
@@ -3112,7 +3112,13 @@ object Warehouse {
   private val AssocMinSup = 3L
   private val AssocTopK = 50
   private val AssocMaxBasket = 1000L
-  private val AssocBuckets = 64
+
+  /** The top `k` rows of `df` under the total order `ord` (a bounded
+    * TakeOrderedAndProject), numbered 1…k in a bigint `rank`. */
+  private def ranked(df: DataFrame, ord: Seq[Column], k: Int): DataFrame =
+    df.orderBy(ord: _*).limit(k)
+      .withColumn("rank", row_number()
+        .over(Window.partitionBy(lit(1)).orderBy(ord: _*)).cast("long"))
 
   /** q164: ASSOCIATION RULES — market-basket mining over order baskets
     * (order = basket, part = item): the top-[[AssocTopK]] co-purchased
@@ -3123,81 +3129,45 @@ object Warehouse {
     *
     * Scale is the A-PRIORI downward-closure prune: a pair can only be
     * frequent if BOTH items are (sup ≥ [[AssocMinSup]]), so item
-    * supports are counted first (map-side combinable) and the quadratic
-    * within-basket pair join runs over FREQUENT items only; baskets
-    * larger than [[AssocMaxBasket]] frequent items are excluded outright
-    * (the q42 maxCell degenerate-basket guard) rather than allowed to
-    * explode one task. Item supports ride the pair join as carried
-    * columns (constant per item, folded with max) — no second join.
-    * All metrics are exact integers: lift_ppm = sup_xy·n·10⁶ DIV
-    * (sup_x·sup_y) on decimal(38,0) products (n = basket count, a
-    * collected literal — q84/q96 observe pattern; ≤ ~10²⁶ at 10¹⁰
-    * baskets), confidences on longs. Top-K via the q68/q96 bucket
-    * prefilter (per-bucket rank caps the global window's input at
-    * [[AssocBuckets]]·K rows), final order total on (lift DESC, x, y).
+    * supports are counted first (a per-item count window over the
+    * distinct (o, item) rows, one exchange by item) and only frequent
+    * items enter the pair count. The pair count is the set-overlap
+    * operator [[graft.functions.Overlap]] with items as members and
+    * baskets as keys: a basket's posting is its frequent items with
+    * their supports, so sup_xy is the number of postings x and y share
+    * and each pair carries sup_x and sup_y — no join. Baskets with more
+    * than [[AssocMaxBasket]] frequent items are hub postings, dropped
+    * outright (the q42 maxCell degenerate-basket guard) rather than
+    * allowed to explode one task. All metrics are exact integers:
+    * lift_ppm = sup_xy·n·10⁶ DIV (sup_x·sup_y) on decimal(38,0) products
+    * (n = basket count, a broadcast 1-row aggregate — countDistinct of
+    * l_orderkey, the baskets with ≥ 1 line; ≤ ~10²⁶ at 10¹⁰ baskets),
+    * confidences on longs. Top-K is a bounded TakeOrderedAndProject on
+    * the total order (lift DESC, x, y).
     */
   def q164AssocRules(s: SparkSession, d: String): DataFrame = {
-    // LINEAR plan (round-20, the q173 single-pass discipline): the
-    // former shape materialized the distinct (o, item) frame with an
-    // eager localCheckpoint (a per-invocation block-manager write whose
-    // blocks outlive the invocation — the q173 anti-scaling mechanism)
-    // because three consumers read it (the basket-count collect, the
-    // item-support aggregate, the support join), then self-joined the
-    // sized frame per basket. Restructured to ONE consumer chain:
-    //   - item supports ride a per-item count window (one exchange by
-    //     item, shared with the distinct — HashPartitioning(item)
-    //     satisfies the (o, item) aggregate's clustering);
-    //   - basket size rides a per-o count window over the frequent
-    //     items (one exchange by o, reused by the basket collect_list);
-    //   - within-basket pairs are GENERATED in-task (double explode)
-    //     instead of the o-keyed self-join;
-    //   - the basket count n becomes a broadcast 1-row aggregate
-    //     (countDistinct(l_orderkey) — distinct (o, item) preserves
-    //     exactly the orderkeys with ≥ 1 line, so the counts agree;
-    //     the q85/q201 single-row-total discipline) instead of a
-    //     per-invocation driver collect.
     val nb = lineitem(s, d)
       .agg(countDistinct(col("l_orderkey")).as("n"))
-    val sized = lineitem(s, d)
+    val items = lineitem(s, d)
       .select(col("l_orderkey").as("o"), col("l_partkey").as("item"))
       .repartition(col("item"))
       .dropDuplicates("o", "item")
       .withColumn("sup", count(lit(1)).over(Window.partitionBy("item")))
       .filter(col("sup") >= AssocMinSup)
-      .withColumn("bsz", count(lit(1)).over(Window.partitionBy("o")))
-      .filter(col("bsz") <= AssocMaxBasket)
-    val pairs = sized
-      .groupBy("o")
-      .agg(collect_list(struct(col("item"), col("sup"))).as("ms"))
-      .select(explode(col("ms")).as("a"), col("ms"))
-      .select(col("a.item").as("part_x"), col("a.sup").as("sx"),
-        explode(col("ms")).as("b"))
-      .filter(col("part_x") < col("b.item"))
-      .select(col("part_x"), col("sx"), col("b.item").as("part_y"),
-        col("b.sup").as("sy"))
-      .repartition(col("part_x"), col("part_y"))
-      .groupBy("part_x", "part_y", "sx", "sy")
-      .agg(count(lit(1)).as("sup_xy"))
-      .filter(col("sup_xy") >= AssocMinSup)
-      .withColumnRenamed("sx", "sup_x")
-      .withColumnRenamed("sy", "sup_y")
+    val rules = Overlap.pairs(
+        Overlap.postings(items, "o", "item", "sup", AssocMaxBasket), AssocMinSup)
+      .select(col("u").as("part_x"), col("v").as("part_y"),
+        col("common").as("sup_xy"), col("szu").as("sup_x"),
+        col("szv").as("sup_y"))
       .crossJoin(broadcast(nb))
       .withColumn("lift_ppm", expr(
         "CAST(sup_xy AS DECIMAL(38,0)) * CAST(n AS DECIMAL(38,0))" +
           " * 1000000 DIV (CAST(sup_x AS DECIMAL(38,0)) * sup_y)"))
       .withColumn("conf_xy_ppm", expr("sup_xy * 1000000 DIV sup_x"))
       .withColumn("conf_yx_ppm", expr("sup_xy * 1000000 DIV sup_y"))
-    val ord = Seq(col("lift_ppm").desc, col("part_x").asc, col("part_y").asc)
-    val wBucket = Window.partitionBy("__bucket").orderBy(ord: _*)
-    val wTop = Window.partitionBy(lit(1)).orderBy(ord: _*)
-    pairs
-      .withColumn("__bucket",
-        pmod(xxhash64(col("part_x"), col("part_y")), lit(AssocBuckets)))
-      .withColumn("__brank", row_number().over(wBucket))
-      .filter(col("__brank") <= AssocTopK)
-      .drop("__bucket", "__brank")
-      .withColumn("rank", row_number().over(wTop).cast("long"))
-      .filter(col("rank") <= AssocTopK)
+    ranked(rules,
+        Seq(col("lift_ppm").desc, col("part_x").asc, col("part_y").asc),
+        AssocTopK)
       .select(col("rank"), col("part_x"), col("part_y"), col("sup_xy"),
         col("sup_x"), col("sup_y"), col("lift_ppm"), col("conf_xy_ppm"),
         col("conf_yx_ppm"))
@@ -3859,22 +3829,13 @@ object Warehouse {
     * noise, not taste); jaccard_ppm = common·10⁶ DIV (|u|+|v|−common) is
     * exact-integer; the order is total on (jaccard DESC, u, v).
     *
-    * Plan, with no join and no pair row before counting:
-    *  1. one exchange by cust serves the (cust, item) distinct and the
-    *     per-cust size window, so `sz` rides each row;
-    *  2. POSTINGS: one exchange by item, `array_sort(collect_list(
-    *     struct(cust, sz)))` per part, hubs dropped by `size(ms)`;
-    *  3. TAILS: member u at position p of a posting pairs with
-    *     `slice(ms, p + 2, …)`, exactly the members v > u with their
-    *     sizes; empty tails are dropped;
-    *  4. one exchange by u collects u's tails, and
-    *     [[graft.functions.Overlap.OverlapCounts]] counts each v across
-    *     them in a compiled open-addressing map, emitting (v, szv,
-    *     common) for common ≥ [[CfMinCommon]];
-    *  5. the exploded neighbours take a bounded top-K
-    *     (TakeOrderedAndProject) and are ranked.
-    * Memory per group: u's tails hold at most |u|·[[CfMaxBlock]]
-    * entries, and so does the kernel's map.
+    * Plan, with no join and no pair row before counting: one exchange
+    * by cust serves the (cust, item) distinct and the per-cust size
+    * window, so `sz` rides each row; the set-overlap operator
+    * [[graft.functions.Overlap]] (customers as members, parts as keys,
+    * hub postings over [[CfMaxBlock]] dropped) counts each pair's common
+    * parts; the neighbours take a bounded top-K (TakeOrderedAndProject)
+    * and are ranked.
     *
     * BOUNDED SCRATCH: the tails carry Σ|block|²/2 entries through the u
     * exchange, quadratic in block density (the `mass` probe below,
@@ -3912,44 +3873,24 @@ object Warehouse {
     val chunks = math.max(1L,
       (mass / 2 * (100 + headroomPct) / 100 + budget - 1) / budget).toInt
 
-    val postings = itemsRaw
-      .repartition(col("cust"))
-      .dropDuplicates("cust", "item")
-      .withColumn("sz", count(lit(1)).over(Window.partitionBy("cust")))
-      // the item exchange is pinned at the configured shuffle parallelism
-      // (REPARTITION_BY_NUM, which AQE does not coalesce): the postings
-      // are a few MB, but the tails generated from them are Σ|block|²/2
-      // entries, which a byte-coalesced handful of tasks would serialize
-      .repartition(s.conf.get("spark.sql.shuffle.partitions").toInt,
-        col("item"))
-      .groupBy("item")
-      .agg(array_sort(collect_list(struct(col("cust"), col("sz")))).as("ms"))
-      .filter(size(col("ms")) <= CfMaxBlock)
-      .select(col("ms"))
+    val postings = Overlap.postings(itemsRaw
+        .repartition(col("cust"))
+        .dropDuplicates("cust", "item")
+        .withColumn("sz", count(lit(1)).over(Window.partitionBy("cust"))),
+      "item", "cust", "sz", CfMaxBlock)
     val ord = Seq(col("jaccard_ppm").desc, col("u").asc, col("v").asc)
-    // every pair (u, v) of `ms` whose u passes `owns`, counted
-    def neighbours(ms: DataFrame, owns: Column => Column): DataFrame = ms
-      .select(posexplode(col("ms")).as(Seq("p", "m")), col("ms"))
-      .filter(col("p") < size(col("ms")) - 1 && owns(col("m.cust")))
-      .select(col("m.cust").as("u"), col("m.sz").as("szu"),
-        slice(col("ms"), col("p") + 2, size(col("ms")) - col("p") - 1)
-          .as("tail"))
-      .groupBy("u", "szu").agg(collect_list(col("tail")).as("tails"))
-      .select(col("u"), col("szu"), explode(
-        graft.functions.Overlap.overlapCounts(col("tails"), CfMinCommon)).as("n"))
-      .select(col("u"), col("n.v").as("v"), col("n.common").as("common"),
-        col("szu"), col("n.szv").as("szv"))
-      .withColumn("jaccard_ppm",
-        expr("common * 1000000 DIV (szu + szv - common)"))
+    // every pair (u, v) of the postings whose u passes `owns`, counted
+    def neighbours(ms: DataFrame, owns: Column => Column): DataFrame =
+      Overlap.pairs(ms, CfMinCommon, owns)
+        .withColumn("jaccard_ppm",
+          expr("common * 1000000 DIV (szu + szv - common)"))
     def top(pairs: DataFrame): DataFrame = pairs.orderBy(ord: _*).limit(CfTopK)
-    def ranked(pairs: DataFrame): DataFrame = top(pairs)
-      .withColumn("rank", row_number()
-        .over(Window.partitionBy(lit(1)).orderBy(ord: _*)).cast("long"))
+    def result(pairs: DataFrame): DataFrame = ranked(pairs, ord, CfTopK)
       .select(col("rank"), col("u").as("cust_u"), col("v").as("cust_v"),
         col("common"), col("szu"), col("szv"), col("jaccard_ppm"))
       .orderBy("rank")
 
-    if (chunks <= 1) ranked(neighbours(postings, _ => lit(true)))
+    if (chunks <= 1) result(neighbours(postings, _ => lit(true)))
     else {
       val shared = postings
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
@@ -3964,7 +3905,7 @@ object Warehouse {
           System.gc()
           rows
         }
-        ranked(s.createDataFrame(
+        result(s.createDataFrame(
           s.sparkContext.parallelize(survivors, 1), step(0).schema))
       } finally shared.unpersist(blocking = false)
     }
@@ -4601,7 +4542,7 @@ object Warehouse {
       |GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin
 
   /** q261: MV MAINTAINED FROM A KV CHANGELOG → REWRITE — the lakehouse
-    * closing of the MV loop (round-16 verdict's optional item): q226
+    * closing of the MV loop: q226
     * rebuilt its MV from the fact scan and q234 refreshed it from a
     * date-sliced re-scan; HERE the fact lives in a graft-kv table and
     * the MV is maintained purely from the table's own CDC changelog —
@@ -4751,8 +4692,8 @@ object Warehouse {
 
   /** q262: GENUINE INCREMENTAL VIEW MAINTENANCE over the kv changelog —
     * inserts, UPDATEs and DELETEs across six commits, the MV maintained
-    * PURELY from per-commit changelog slices (round-18 verdict item 3;
-    * q261 covers the append-only regime and keeps its refusal).
+    * PURELY from per-commit changelog slices (q261 covers the
+    * append-only regime and keeps its refusal).
     *
     * Fixture: the orders fact (o_orderkey is genuinely UNIQUE in the
     * synthetic data — the keyed-table precondition; lineitem's

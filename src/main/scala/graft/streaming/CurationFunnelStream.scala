@@ -30,14 +30,15 @@ import graft.functions.{MinHash, VectorExpressions}
   *    time (slicing-DEPENDENT, exactly like [[TtlDedupProcessor]]'s
   *    eager admission — kept because a live ingest wants pairs now);
   *  - `grams/batch_id=N` — the distinct 2-gram shingle sets of the
-  *    brute-force leg's population (en, src0, ≥2 tokens), so the
+  *    exact-Jaccard leg's population (en, src0, ≥2 tokens), so the
   *    ledger can replay q237's exact-Jaccard edge leg without text.
   *
   * The LEDGER is where slicing-independence is restored: near-dup
   * edges are derived from the ACCUMULATED postings with BATCH
   * semantics ([[MinHash.pairsFromPostings]] — the bucket guard applied
   * to final occupancy, exactly what `candidatePairs` over the union
-  * computes), the brute leg self-joins the accumulated grams, and the
+  * computes), the exact-Jaccard leg runs `LlmOps.jaccardHalfPairs` over
+  * the accumulated grams (the batch leg's own helper), and the
   * funnel arithmetic is `LlmOps.curationLedger` — INVOKED, never
   * re-implemented, so the stream cannot drift from the gated batch
   * path. Ledger cost is snapshot-sized (the decision frame is global
@@ -86,7 +87,7 @@ object CurationFunnelStream {
         maxBucket = 100, minJaccard = 0.5)(
       batch.filter(col("lang") === "en")
         .select(col("doc_id"), toks(col("text")).as("tokens")), batchId)
-    // brute-force exact-Jaccard leg population: distinct 2-gram sets
+    // exact-Jaccard leg population: distinct 2-gram sets
     val t = toks(col("text"))
     batch.filter(col("lang") === "en" && col("source") === "src0" &&
         size(t) >= 2)
@@ -111,31 +112,10 @@ object CurationFunnelStream {
         maxBucket = 100, minJaccard = 0.5)
       .select("id_a", "id_b")
     val grams = keepLatest(readOrEmpty(s, s"$root/grams", GramsSchema), "doc_id")
-    // exact-Jaccard leg, INVERTED-INDEX-shaped (round-20 — the same
-    // round-17 rewrite the batch dedupEdges carries): the former
-    // id_a < id_b theta self-join was a nested-loop comparing every
-    // gram-set pair — quadratic in the accumulated population, and the
-    // single biggest cost of the ledger. Candidates sharing ≥ 1 bigram
-    // (a Jaccard ≥ 0.5 pair always does; grams are non-empty — ingest
-    // keeps only docs with ≥ 2 tokens) are counted via one gram-keyed
-    // equi-join — Σ df(gram)² work; grams are distinct sets, so
-    // |∪| = sza + szb − inter and `2·|∩| ≥ |∪|` ⇔ `3·inter ≥ sza+szb` —
-    // the identical integer-arithmetic pair set.
-    val inv = grams.select(col("doc_id"), size(col("grams")).as("sz"),
-      explode(col("grams")).as("g"))
-    val jac = inv.select(col("g"), col("doc_id").as("id_a"), col("sz").as("sza"))
-      .join(inv.select(col("g"), col("doc_id").as("id_b"),
-        col("sz").as("szb")), Seq("g"))
-      .filter(col("id_a") < col("id_b"))
-      .groupBy("id_a", "id_b")
-      .agg(count(lit(1)).as("inter"),
-        max(col("sza")).as("sza"), max(col("szb")).as("szb"))
-      .filter(lit(3) * col("inter") >= col("sza") + col("szb"))
-      .select(col("id_a"), col("id_b"))
     graft.queries.LlmOps.curationLedger(s,
       facts.select(col("doc_id"), col("source"), col("lang"), col("h"),
         col("ntok")),
-      lsh.unionByName(jac),
+      lsh.unionByName(graft.queries.LlmOps.jaccardHalfPairs(grams)),
       facts.select(col("doc_id"), col("logit")))
   }
 }

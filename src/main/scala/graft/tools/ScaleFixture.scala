@@ -46,9 +46,10 @@ object ScaleFixture {
     val out = if (args.length > 1) args(1) else "/tmp/sf1"
     val reps = if (args.length > 2) args(2).toInt else 10
     val scaleVocab = args.length > 3 && args(3).toBoolean
+    val cpus = graft.SparkEntry.localCores
     val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
+      .master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", cpus.toLong)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.ui.enabled", "false")

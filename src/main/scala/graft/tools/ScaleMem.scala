@@ -29,7 +29,7 @@ object ScaleMem {
     val sfDir = args(0)
     val outDir = args(1)
     val names = if (args.length > 2) args.drop(2).toSeq else DedupFamily
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = graft.SparkEntry.localCores
     // default to a FRESH warehouse: the published layouts these chains
     // lean on (LSH postings, canonical picks, …) must be BUILT inside
     // the constrained heap, or the run certifies a cached read instead
@@ -42,7 +42,7 @@ object ScaleMem {
       .flatMap(_.split(',')).map(_.split("=", 2)).map(a => a(0) -> a(1))
     val b0 = SparkSession.builder()
       .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
+      .config("spark.sql.shuffle.partitions", cpus.toLong)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.sql.warehouse.dir", wh)

@@ -12,9 +12,10 @@ object TimeOne {
     val iters = if (args.length > 1) args(1).toInt else 3
     val names: Set[String] =
       if (args.length > 2) args.drop(2).toSet else graft.SparkEntry.queries.keySet
+    val cpus = graft.SparkEntry.localCores
     val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
+      .master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", cpus.toLong)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.ui.enabled", "false")

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.graftbridge.ListenerDrain
+import org.apache.spark.graftbridge.{ListenerDrain, LiveShuffles}
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 import org.scalatest.BeforeAndAfterAll
@@ -44,6 +44,36 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
       ListenerDrain.drain(sc)
       (out, jobs.get)
     } finally sc.removeSparkListener(counter)
+  }
+
+  /** Run `body` and return its result with the shuffles it registered
+    * that were still reachable each time it began planning a query
+    * (in order; [[org.apache.spark.graftbridge.LiveShuffles]]). The
+    * sample runs on the driver thread, inside an extra optimizer rule,
+    * after the listener bus is drained (an event in flight may still
+    * reference a finished plan), so it sees exactly the plans `body`
+    * still holds: a loop that drops each step's plan before planning the
+    * next keeps the samples flat, one that keeps every step's plan makes
+    * them grow with the step number. */
+  def liveShufflesBy[A](body: => A): (A, Seq[Set[Int]]) = {
+    val sc = spark.sparkContext
+    ListenerDrain.drain(sc)
+    val before = LiveShuffles(sc)
+    val samples = Seq.newBuilder[Set[Int]]
+    val probe = new org.apache.spark.sql.catalyst.rules.Rule[
+        org.apache.spark.sql.catalyst.plans.logical.LogicalPlan] {
+      def apply(plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan) = {
+        ListenerDrain.drain(sc)
+        samples += LiveShuffles(sc) -- before
+        plan
+      }
+    }
+    val extra = spark.experimental.extraOptimizations
+    spark.experimental.extraOptimizations = extra :+ probe
+    try {
+      val out = body
+      (out, samples.result())
+    } finally spark.experimental.extraOptimizations = extra
   }
 
   override def afterAll(): Unit = {

@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.Row
+import org.apache.spark.sql.{Column, Row}
 import org.apache.spark.sql.catalyst.expressions.Literal
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.functions._
@@ -10,8 +10,8 @@ import org.scalacheck.rng.Seed
 
 import graft.SparkSpec
 
-/** `overlap_counts` against a brute-force count: the kernel behind
-  * q173's per-customer overlap. */
+/** The set-overlap operator (`Overlap.postings` → `Overlap.pairs`) and
+  * its `overlap_counts` kernel, each against a brute-force count. */
 class OverlapSpec extends SparkSpec {
   import spark.implicits._
 
@@ -89,5 +89,78 @@ class OverlapSpec extends SparkSpec {
     val bad = intercept[Exception](
       Seq(Seq(1L)).toDF("a").select(Overlap.overlapCounts(col("a"), 2L)).collect())
     assert(bad.getMessage.contains("overlap_counts"))
+  }
+
+  // members: distinct ids, each holding a set of string keys; `sz` is
+  // the key count plus a per-member extra (sizes may count keys the
+  // intersection never sees)
+  private val membersGen: Gen[Map[Long, Set[String]]] = for {
+    n <- Gen.chooseNum(0, 14)
+    ids <- Gen.listOfN(n, Gen.chooseNum(-20L, 40L))
+    sets <- Gen.listOfN(n, Gen.chooseNum(0, 7).flatMap(k =>
+      Gen.listOfN(k, Gen.chooseNum(0, 9).map(i => s"k$i"))))
+  } yield ids.zip(sets.map(_.toSet)).toMap
+
+  private def sizeOf(id: Long, keys: Set[String]): Long = keys.size + math.abs(id) % 3
+
+  private def membersDf(m: Map[Long, Set[String]]) =
+    m.toSeq.flatMap { case (id, ks) => ks.toSeq.map(k => (k, id, sizeOf(id, ks))) }
+      .toDF("key", "id", "sz")
+
+  /** (u, szu, v, szv, common) for u < v sharing ≥ minCommon keys held by
+    * at most maxPosting members. */
+  private def bruteForcePairs(m: Map[Long, Set[String]], minCommon: Long,
+      maxPosting: Long): Set[(Long, Long, Long, Long, Long)] = {
+    val df = m.values.toSeq.flatMap(_.toSeq).groupBy(identity).view.mapValues(_.size).toMap
+    val ids = m.keys.toSeq.sorted
+    (for {
+      i <- ids.indices; j <- (i + 1) until ids.size
+      u = ids(i); v = ids(j)
+      common = (m(u) & m(v)).count(k => df(k) <= maxPosting).toLong
+      if common >= minCommon
+    } yield (u, sizeOf(u, m(u)), v, sizeOf(v, m(v)), common)).toSet
+  }
+
+  private def operator(m: Map[Long, Set[String]], minCommon: Long, maxPosting: Long,
+      owns: Column => Column = _ => lit(true)) =
+    Overlap.pairs(Overlap.postings(membersDf(m), "key", "id", "sz", maxPosting),
+      minCommon, owns)
+
+  private def rows(df: org.apache.spark.sql.DataFrame) =
+    df.as[(Long, Long, Long, Long, Long)].collect().toSeq
+
+  test("the operator's pairs equal a brute-force pair count over random member sets") {
+    (1L to 36L).foreach { seed =>
+      val m = sample(membersGen, seed)
+      val minCommon = seed % 3 + 1
+      // every other seed caps postings at 2 members, dropping the keys
+      // that more members share
+      val maxPosting = if (seed % 2 == 0) 2L else Long.MaxValue
+      val want = bruteForcePairs(m, minCommon, maxPosting)
+      val got = rows(operator(m, minCommon, maxPosting))
+      assert(got.size == got.toSet.size, s"seed=$seed duplicate pairs $got")
+      assert(got.toSet == want, s"seed=$seed minCommon=$minCommon maxPosting=$maxPosting")
+      if (seed % 4 == 1) {
+        // an owns split of the u space: the parts are disjoint and union
+        // to the whole
+        val parts = Seq(0, 1).map(j => rows(operator(m, minCommon, maxPosting,
+          u => pmod(u, lit(2)) === j)))
+        assert(parts.flatten.size == got.size && parts.flatten.toSet == want,
+          s"seed=$seed owns split")
+      }
+    }
+  }
+
+  test("the operator covers a capped key and an empty members frame") {
+    // k0 is shared by three members: at maxPosting 2 it is a hub and drops
+    val m = Map(1L -> Set("k0", "k1"), 2L -> Set("k0", "k1"), 3L -> Set("k0"))
+    assert(rows(operator(m, 1L, 3L)).toSet ==
+      Set((1L, 3L, 2L, 4L, 2L), (1L, 3L, 3L, 1L, 1L), (2L, 4L, 3L, 1L, 1L)))
+    assert(rows(operator(m, 1L, 2L)).toSet == Set((1L, 3L, 2L, 4L, 1L)))
+    val full = operator(m, 1L, 3L)
+    val empty = operator(Map.empty, 1L, 3L)
+    assert(empty.collect().isEmpty)
+    assert(empty.schema == full.schema)
+    assert(full.columns.toSeq == Seq("u", "szu", "v", "szv", "common"))
   }
 }

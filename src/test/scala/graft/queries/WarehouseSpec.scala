@@ -436,6 +436,9 @@ class WarehouseSpec extends SparkSpec {
     assert(got.map(r => (r._1, r._2, r._3)).distinct.size == got.size)
   }
 
+  // jobs q164 runs at sf0.001 on local[4] (measured)
+  private val Q164Jobs = 9
+
   test("q164 association rules equal a brute-force basket replay; a-priori " +
     "pruning is lossless at the support threshold") {
     val minSup = 3L
@@ -457,10 +460,13 @@ class WarehouseSpec extends SparkSpec {
     val expected = scored.zipWithIndex.map { case (r, i) =>
       (i + 1L, r._2, r._3, r._4, r._5, r._6, r._1, r._7, r._8)
     }
-    val got = Warehouse.q164AssocRules(spark, d)
-      .as[(Long, Long, Long, Long, Long, Long, Long, Long, Long)]
-      .collect().toSeq
+    val ((got, jobs), left) = persistedBy(jobsRunBy(
+      Warehouse.q164AssocRules(spark, d)
+        .as[(Long, Long, Long, Long, Long, Long, Long, Long, Long)]
+        .collect().toSeq))
     assert(got == expected)
+    assert(jobs <= Q164Jobs, s"q164 ran $jobs jobs")
+    assert(left.isEmpty, s"q164 left RDDs $left persisted")
     // every surfaced pair's items are themselves frequent (downward
     // closure — the property that makes the a-priori prune lossless)
     got.foreach(r => assert(r._5 >= minSup && r._6 >= minSup))
@@ -648,18 +654,24 @@ class WarehouseSpec extends SparkSpec {
     // identical schema, at several chunk counts, and the persisted
     // postings are released when the steps end
     // fixture Σ|block|² ≈ 149k → chunks = ⌈1.25·mass/2budget⌉ (25%
-    // skew headroom): 11 and 4 steps
+    // skew headroom): 11 and 4 steps. Each step must drop its plan before
+    // the next is planned, so its shuffle files can go: the shuffles
+    // still reachable when a query is planned do not grow with the step
     for (budget <- Seq("9000", "30000")) {
       spark.conf.set("spark.graft.q173.stepPairBudget", budget)
       try {
-        val ((schema, rows), left) = persistedBy {
+        val (((schema, rows), left), live) = liveShufflesBy(persistedBy {
           val chunked = Warehouse.q173CfNeighbors(spark, d)
           (chunked.schema, chunked.as[(Long, Long, Long, Long, Long, Long, Long)]
             .collect().toSeq)
-        }
+        })
         assert(schema == single.schema, s"budget=$budget schema")
         assert(rows == expected, s"budget=$budget rows")
         assert(left.isEmpty, s"budget=$budget left RDDs $left persisted")
+        val held = live.filter(_.nonEmpty)
+        assert(held.size >= 2, s"budget=$budget sampled $live")
+        assert(held.forall(_.subsetOf(held.head)),
+          s"budget=$budget reachable shuffles grew over the steps: $live")
       } finally spark.conf.unset("spark.graft.q173.stepPairBudget")
     }
   }
