@@ -1,5 +1,8 @@
 package graft
 
+import java.time.Instant
+
+import jdk.jfr.consumer.RecordedEvent
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.execution.columnar.InMemoryRelation
@@ -18,6 +21,11 @@ import org.apache.spark.sql.execution.columnar.InMemoryRelation
   *    must be released by the function that made it
   *    ([[graft.ops.Snapshots]]). An unreleased snapshot keeps its blocks
   *    in storage memory for whatever runs next.
+  *  - process forks: fails if building a query makes Hadoop fork a shell
+  *    command (`chmod`, `readlink`, ...). Without libhadoop its stock
+  *    local filesystem forks one per file create, mode change or link
+  *    lookup; `file:` resolves to the `java.nio` one in
+  *    [[graft.sources.NioLocalFileSystem]], which forks none.
   */
 class PlanGuardSpec extends SparkSpec {
 
@@ -58,17 +66,29 @@ class PlanGuardSpec extends SparkSpec {
       case m: InMemoryRelation => m.cacheBuilder.cachedColumnBuffers.id
     }.toSet
 
-  /** Per query: (plans a nested loop, persisted RDD ids left unread). */
-  private lazy val sweep: Map[String, (Boolean, Set[Int])] =
-    SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>
-      val (df, left) = persistedBy(fn(spark, "/root/testdata/sf0.001"))
-      val plan = df.queryExecution.sparkPlan.toString
-      name -> ((plan.contains("CartesianProduct") ||
-        plan.contains("BroadcastNestedLoopJoin"), left -- readRdds(df)))
+  /** Per query: (plans a nested loop, persisted RDD ids left unread,
+    * the processes Hadoop's `Shell` started while building it). One
+    * recording covers the sweep; a query owns the spawns from the start
+    * of its build to the start of the next. */
+  private lazy val sweep: Map[String, (Boolean, Set[Int], Seq[RecordedEvent])] = {
+    val (built, spawned) = Spawns.by(SparkEntry.queries.toSeq.sortBy(_._1).map {
+      case (name, fn) =>
+        val start = Instant.now()
+        val (df, left) = persistedBy(fn(spark, "/root/testdata/sf0.001"))
+        val plan = df.queryExecution.sparkPlan.toString
+        (name, start, plan.contains("CartesianProduct") ||
+          plan.contains("BroadcastNestedLoopJoin"), left -- readRdds(df))
+    })
+    val shell = Spawns.hadoopShell(spawned).groupBy { e =>
+      built.takeWhile(!_._2.isAfter(e.getStartTime)).lastOption.getOrElse(built.head)._1
+    }
+    built.map { case (name, _, nested, unread) =>
+      name -> ((nested, unread, shell.getOrElse(name, Nil)))
     }.toMap
+  }
 
   test("no unintentional nested-loop join in any registered physical plan") {
-    val nestedByName = sweep.map { case (name, (nested, _)) => name -> nested }
+    val nestedByName = sweep.map { case (name, (nested, _, _)) => name -> nested }
     val offenders = nestedByName.collect {
       case (name, true) if !intentional.contains(name) => name
     }
@@ -82,8 +102,15 @@ class PlanGuardSpec extends SparkSpec {
 
   test("no registered query leaves a persisted RDD its result does not read") {
     val leaks = sweep.collect {
-      case (name, (_, unread)) if unread.nonEmpty => s"$name -> rdd ${unread.mkString(",")}"
+      case (name, (_, unread, _)) if unread.nonEmpty => s"$name -> rdd ${unread.mkString(",")}"
     }
     assert(leaks.isEmpty, s"unreleased snapshots: ${leaks.toSeq.sorted.mkString("; ")}")
+  }
+
+  test("no registered query makes Hadoop fork a shell command") {
+    val forked = sweep.collect {
+      case (name, (_, _, shell)) if shell.nonEmpty => s"$name: ${Spawns.census(shell)}"
+    }
+    assert(forked.isEmpty, s"Hadoop shell forks: ${forked.toSeq.sorted.mkString("; ")}")
   }
 }

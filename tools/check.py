@@ -1,7 +1,10 @@
 #!/usr/bin/env python3
 """Local replica of the driver's correctness gate: run graft.Verify output
 against DuckDB oracles over the same parquet tables. Usage:
-  python3 tools/check.py <sfdir> <verify_outdir>
+  python3 tools/check.py <sfdir> <verify_outdir> [query ...]
+Queries may be named as separate arguments, as comma lists, or both; with
+none, every oracle in <verify_outdir>/oracle_sql.json is checked. A named
+query without an oracle is an error (exit 2), not a smaller check.
 """
 import sys, json, glob, os
 import duckdb
@@ -15,10 +18,14 @@ for p in glob.glob(f"{sfdir}/*.parquet"):
     con.execute(f"CREATE VIEW {name} AS SELECT * FROM read_parquet('{src}')")
 
 oracles = json.load(open(f"{outdir}/oracle_sql.json"))
-# optional 3rd arg: comma-separated query names (per-query runs — the
-# sf1 scale gate wraps each query in its own timed subprocess)
-if len(sys.argv) > 3:
-    only = set(sys.argv[3].split(","))
+# per-query runs: the sf1 scale gate wraps each query in its own timed
+# subprocess
+only = {q for arg in sys.argv[3:] for q in arg.split(",") if q}
+if only:
+    missing = sorted(only - oracles.keys())
+    if missing:
+        print(f"no oracle for: {', '.join(missing)}")
+        sys.exit(2)
     oracles = {k: v for k, v in oracles.items() if k in only}
 fails = 0
 for name, sql in sorted(oracles.items()):
